@@ -119,13 +119,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(F.length(t) > 0, punct / F.length(t)).otherwise(F.lit(0.0))
 
 
-def uppercase_ratio(text: Column | str) -> Column:
-    t = _col(text)
-    upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-    letters = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
-    return F.when(letters > 0, upper / letters).otherwise(F.lit(0.0))
-
-
 def mean_word_length(text: Column | str, words_col: Column | None = None) -> Column:
     w = words_col if words_col is not None else words(text)
     total = F.aggregate(w, F.lit(0), lambda acc, x: acc + F.length(x))
@@ -207,11 +200,6 @@ def fingerprint(text: Column | str) -> Column:
     (operators/dedup.py).
     """
     return F.md5(normalize_text(text))
-
-
-def xxfingerprint(text: Column | str, seed: int = 42) -> Column:
-    """64-bit engine-internal fingerprint (fast path, not oracle-portable)."""
-    return F.xxhash64(normalize_text(text), F.lit(seed))
 
 
 def masked_fingerprint(text: Column | str) -> Column:

@@ -11,15 +11,15 @@ chosen at ``:399-402``). Spark has no Arrow IPC file source, so:
   DuckDB's nanoarrow extension cannot (reference ``test.sh:10-13``).
   For 100 TB the unit of parallelism is the file — the ingest layer
   bounds file sizes (~1 MB-class micro-batches), so scans stay even.
-- **write**: executor-side pyarrow Feather-v2 writer via
-  ``applyInPandas`` per partition directory, preserving the reference's
-  storage contract: Timestamp(ns), int8 dictionary for stream/logtag,
+- **write**: :func:`write_arrow_file`, called executor-side by the
+  lake's one-pass writer (``LogLake.write_formats``) on the same sorted
+  slice its Parquet file is written from, preserving the reference's
+  storage contract: ns ``time_ns``, int8 dictionary for stream/logtag,
   ZSTD bodies.
 """
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -207,12 +207,8 @@ def _to_arrow_compact(table: pa.Table) -> pa.Table:
     for name in table.column_names:
         col = table.column(name)
         if name in DICT_COLUMNS and pa.types.is_string(col.type):
-            combined = col.combine_chunks()
-            if isinstance(combined, pa.ChunkedArray):
-                combined = combined.chunk(0) if combined.num_chunks else pa.array([], col.type)
-            dict_arr = combined.dictionary_encode()
-            idx = dict_arr.indices.cast(pa.int8())
-            col = pa.DictionaryArray.from_arrays(idx, dict_arr.dictionary)
+            dict_arr = col.combine_chunks().dictionary_encode()
+            col = pa.DictionaryArray.from_arrays(dict_arr.indices.cast(pa.int8()), dict_arr.dictionary)
         cols[name] = col
     return pa.table(cols)
 
@@ -228,39 +224,3 @@ def write_arrow_file(table: pa.Table, dest: str) -> None:
         filesystem.create_dir(path.rsplit("/", 1)[0], recursive=True)
     with filesystem.open_output_stream(path) as sink:
         feather.write_feather(_to_arrow_compact(table), sink, compression="zstd")
-
-
-def write_arrow_partitioned(
-    df: DataFrame,
-    root: str,
-    partition_cols: list[str],
-    time_ns_col: str = "time_ns",
-) -> None:
-    """Partitioned Arrow IPC sink (hive-style directories, like the
-    parquet side of the lake).
-
-    Runs as ``applyInArrow`` over the partition key so each partition's
-    file is written where its data lives — no driver collection and no
-    pandas hop (a pandas round-trip would coerce nullable int64 ns
-    values to float64, corrupting them). The µs ``time`` column is
-    dropped on write (storage keeps the ns long as ``time_ns``,
-    mirroring the reference's single Timestamp(ns) column; readers
-    re-derive µs).
-    """
-    value_cols = [c for c in df.columns if c not in partition_cols and c != "time"]
-
-    def write_group(key: tuple, table: pa.Table) -> pa.Table:
-        rel = "/".join(f"{c}={v}" for c, v in zip(partition_cols, key))
-        dest = f"{root.rstrip('/')}/{rel}/{uuid.uuid4().hex}.arrow"
-        write_arrow_file(table.select(value_cols), dest)
-        return pa.table({"path": [dest], "rows": [len(table)]})
-
-    out_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("rows", T.LongType()),
-        ]
-    )
-    # The action drives the distributed write; results are tiny (one row
-    # per partition dir).
-    df.groupBy(*partition_cols).applyInArrow(write_group, out_schema).collect()

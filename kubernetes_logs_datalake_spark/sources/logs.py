@@ -20,20 +20,66 @@ Layouts
   (``y-logcli:138-143``; DuckDB's 1-based ``string_split`` indexes
   become 0-based here).
 
-Formats: ``parquet`` natively; ``arrow`` (Feather v2, ZSTD, int8
-dictionaries) via :mod:`kubernetes_logs_datalake_spark.sources.arrow_ipc`.
+Formats: ``parquet`` (ZSTD) and ``arrow`` (Feather v2, ZSTD, int8
+dictionaries, :mod:`kubernetes_logs_datalake_spark.sources.arrow_ipc`),
+both written by one grouped pass (:meth:`LogLake.write_formats`) and read
+by Spark's Parquet source and the IPC source.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kubernetes_logs_datalake_spark.functions.time_ns import ns_to_timestamp
 from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
+from kubernetes_logs_datalake_spark.sources.arrow_ipc import _resolve_fs, read_arrow, write_arrow_file
+
+FORMATS = ("parquet", "arrow")
+
+# Parquet dictionary pages only where values repeat; time and message
+# are near-unique per row, where a dictionary only costs bytes.
+PARQUET_DICT_COLUMNS = ["stream", "logtag", "node", "pod", "container"]
+
+# Spark's escaping of hive partition values in directory names
+# (ExternalCatalogUtils.escapePathName), so partition discovery reads
+# back the exact value: '/' or ':' in a cluster name stays one level.
+_HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # null or empty value
+
+
+def _partition_dir_value(value) -> str:
+    if value is None or value == "":
+        return HIVE_DEFAULT_PARTITION
+    return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in str(value))
+
+
+def _partition_value_from_dir(name: F.Column) -> F.Column:
+    """Inverse of :func:`_partition_dir_value`, as Spark's partition
+    discovery decodes Parquet directories: ``+`` is literal, and a name
+    that is not valid escaping is taken as it is."""
+    decoded = F.try_url_decode(F.regexp_replace(name, r"\+", "%2B"))
+    return F.when(name != HIVE_DEFAULT_PARTITION, F.coalesce(decoded, name))
+
+
+def _write_parquet_file(table: pa.Table, dest: str) -> None:
+    """One ZSTD Parquet file (level 3, parquet-mr's default) with a
+    delta-encoded time, through the same ``pyarrow.fs`` resolution as
+    the Arrow sink."""
+    filesystem, path = _resolve_fs(dest)
+    filesystem.create_dir(path.rsplit("/", 1)[0], recursive=True)
+    delta = {c: "DELTA_BINARY_PACKED" for c in ("time_ns", "time") if c in table.column_names}
+    pq.write_table(
+        table, path, filesystem=filesystem, compression="zstd", compression_level=3,
+        use_dictionary=[c for c in PARQUET_DICT_COLUMNS if c in table.column_names],
+        column_encoding=delta,
+    )
 
 
 def _ensure_date(df: DataFrame) -> DataFrame:
@@ -71,8 +117,9 @@ def _normalize_time(df: DataFrame) -> DataFrame:
 @dataclass
 class LogLake:
     """A log lake rooted at ``root`` (local path or object-store URI —
-    everything goes through the Hadoop filesystem layer, so ``s3a://``
-    works unchanged on a cluster)."""
+    reads go through the Hadoop filesystem layer and writes through
+    ``pyarrow.fs``, which maps ``s3a://`` onto its S3 filesystem, so the
+    same root works unchanged on a cluster)."""
 
     root: str
     layout: str = "native"  # native | positional
@@ -85,45 +132,50 @@ class LogLake:
     # ---------------------------------------------------------------- write
 
     def write_batch(self, df: DataFrame, fmt: str = "parquet", mode: str = "append") -> None:
-        """Write a batch of canonical log records.
+        """Append a batch of canonical log records in one format, under
+        a fresh uuid (:meth:`write_formats`). Only ``append`` exists: any
+        other mode raises before anything is written, since a whole-root
+        overwrite would delete the other format and every other partition.
+        """
+        if mode != "append":
+            raise ValueError(f"write_batch supports mode='append' only, got {mode!r}")
+        self.write_formats(df, (fmt,), uuid.uuid4().hex)
 
-        Native layout only (the positional layout exists for reading data
-        produced by the reference's writer, not for producing new data).
-        ``maxRecordsPerFile`` caps file size so a skewed namespace/day
-        cannot produce an unsplittable multi-GB file at scale.
+    def write_formats(self, df: DataFrame, formats: tuple[str, ...], batch_id: str) -> None:
+        """Write every format in ``formats`` from one grouped Arrow pass,
+        as the reference writes both files from one buffer
+        (``compact_columns.c:332-418``). ``groupBy(cluster, namespace,
+        date).applyInArrow`` hands each partition to one task, which
+        sorts it by ``time_ns`` and writes slices of at most
+        ``max_records_per_file`` rows (T2) as
+        ``part-<batch_id>-<slice>.parquet`` (``time_ns`` + µs ``time``)
+        and/or ``.arrow`` (no µs ``time``). Sorted slices cover disjoint
+        time ranges, so ``--since`` skips whole files and row groups.
+        At most two Spark jobs, nothing persisted; the same rows written
+        again under the same ``batch_id`` overwrite their files.
+        Native layout only: the positional layout is read-only.
         """
         if self.layout != "native":
-            raise ValueError("write_batch supports the native hive layout only")
-        out = _ensure_date(df)
-        if fmt == "parquet":
-            # Range-partition on (partition cols, time): a hot
-            # namespace/day splits into parallel TIME-RANGE tasks (not
-            # interleaved hash/skew splits), and the in-task sort makes
-            # every file and row group a tight, disjoint time span —
-            # zone-map clustering, so a --since predicate skips whole
-            # row groups instead of scanning the day.
-            cols = [F.col(c) for c in NATIVE_PARTITIONING] + [F.col("time_ns")]
-            (
-                out.repartitionByRange(*cols)
-                .sortWithinPartitions(*cols)
-                .write.mode(mode)
-                .option("maxRecordsPerFile", self.max_records_per_file)
-                .partitionBy(*NATIVE_PARTITIONING)
-                .parquet(self.root)
-            )
-        elif fmt == "arrow":
-            from kubernetes_logs_datalake_spark.sources.arrow_ipc import write_arrow_partitioned
+            raise ValueError("the lake writer supports the native hive layout only")
+        unknown = [f for f in formats if f not in FORMATS]
+        if unknown:
+            raise ValueError(f"unknown format {unknown[0]!r}")
+        root, parts, max_rows = self.root.rstrip("/"), NATIVE_PARTITIONING, self.max_records_per_file
 
-            if mode != "append":
-                # the uuid-file arrow sink has no overwrite semantics;
-                # silently appending under mode='overwrite' would leave
-                # old+new rows side by side
-                raise ValueError(
-                    f"arrow format supports mode='append' only, got {mode!r}"
-                )
-            write_arrow_partitioned(out, self.root, partition_cols=NATIVE_PARTITIONING)
-        else:
-            raise ValueError(f"unknown format {fmt!r}")
+        def write_group(key: tuple, table: pa.Table) -> pa.Table:
+            rel = "/".join(f"{c}={_partition_dir_value(v.as_py())}" for c, v in zip(parts, key))
+            table = table.drop_columns(parts).sort_by("time_ns")
+            arrow_cols = [c for c in table.column_names if c != "time"]
+            for i, start in enumerate(range(0, table.num_rows, max_rows)):
+                part = table.slice(start, max_rows)
+                dest = f"{root}/{rel}/part-{batch_id}-{i:05d}"
+                if "parquet" in formats:
+                    _write_parquet_file(part, dest + ".parquet")
+                if "arrow" in formats:
+                    write_arrow_file(part.select(arrow_cols), dest + ".arrow")
+            return pa.table({"rows": [table.num_rows]})
+
+        _ensure_date(df).groupBy(*parts).applyInArrow(write_group, "rows long").collect()
 
     # ----------------------------------------------------------------- read
 
@@ -152,8 +204,6 @@ class LogLake:
                 .parquet(self.root)
             )
         elif fmt == "arrow":
-            from kubernetes_logs_datalake_spark.sources.arrow_ipc import read_arrow
-
             df = read_arrow(spark, self.root)
             # Hive partition values live in the directory names; the
             # arrow decode carries the file path in `_file` — recover
@@ -161,9 +211,9 @@ class LogLake:
             # does this natively; the IPC source mirrors it).
             for part in NATIVE_PARTITIONING:
                 if part not in df.columns:
-                    df = df.withColumn(
-                        part, F.regexp_extract(F.col("_file"), f"/{part}=([^/]+)/", 1)
-                    )
+                    df = df.withColumn(part, _partition_value_from_dir(
+                        F.regexp_extract(F.col("_file"), f"/{part}=([^/]+)/", 1)
+                    ))
         else:
             raise ValueError(f"unknown format {fmt!r}")
         df = _normalize_time(df)
@@ -239,8 +289,6 @@ class LogLake:
         if fmt == "parquet":
             df = spark.read.parquet(glob)
         elif fmt == "arrow":
-            from kubernetes_logs_datalake_spark.sources.arrow_ipc import read_arrow
-
             df = read_arrow(spark, glob)
         else:
             raise ValueError(f"unknown format {fmt!r}")

@@ -18,24 +18,29 @@ Spark-first mapping (not a port):
   a file is ingested, wholly, the trigger after it appears.
 - **T3 timeout flush** → ``trigger(processingTime=…)`` upper-bounds
   latency the way ``upload_timeout`` does.
-- **T2 size flush** → ``maxRecordsPerFile``/``maxBytesPerTrigger``-style
-  rolling inside the batch writer bounds file sizes.
+- **T2 size flush** → the batch writer cuts each partition's
+  time-sorted rows into slices of at most ``max_records_per_file`` rows,
+  one file per slice and format.
 - **T5 graceful stop** → ``stop_gracefully()`` lets the in-flight batch
-  commit (``foreachBatch`` is atomic per epoch); nothing buffered is
-  lost, and re-delivery after an unclean stop is at-least-once (T6),
-  exactly the reference's contract (its tests count *distinct* markers
-  for this reason, ``test.sh:519-525``).
-- **Per-key buffers (T1)** → ``partitionBy`` on the lake layout; there
-  is no per-pod state to manage because batches are written partitioned.
+  commit; nothing buffered is lost. After an unclean stop the
+  uncommitted epoch is replayed from the offset log (T6), and since its
+  files are named from the epoch id the replay rewrites them instead of
+  appending a second copy (the reference settles for at-least-once; its
+  tests count *distinct* markers, ``test.sh:519-525``).
+- **Per-key buffers (T1)** → one ``groupBy(cluster, namespace,
+  date).applyInArrow`` pass per batch writes each partition's Parquet
+  and Arrow IPC files from the same time-sorted table
+  (``LogLake.write_formats``), with no persist: at most two Spark jobs.
 
 At 100 TB/day the same topology holds: one stream per cluster (or a
 shared S3 inventory stream), file-offset checkpoints in object storage,
-AQE-sized batch writes, and a periodic compaction pass for small files
+one grouped write per batch, and a periodic compaction pass for small files
 (``compact_lake``).
 """
 
 from __future__ import annotations
 
+import zlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,32 +91,27 @@ class IngestJob:
     # ------------------------------------------------------------- run
 
     def start(self, spark: SparkSession):
-        lake = LogLake(self.lake_root)
-        formats = self.formats
-
-        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # persist: isEmpty + one write per format would otherwise
-            # re-read and re-parse every input file per sink (3x the
-            # ingest hot path with the default dual-format config)
-            batch_df.persist()
-            try:
-                if not batch_df.isEmpty():
-                    for fmt in formats:
-                        lake.write_batch(batch_df, fmt=fmt)
-            finally:
-                batch_df.unpersist()
-
-        # checkpoint lives OUTSIDE the lake root so compaction's
-        # directory swap can never clobber stream offsets
-        checkpoint = self.checkpoint or (self.lake_root.rstrip("/") + "_checkpoint")
         self._query = (
             self.records(spark)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
+            .writeStream.foreachBatch(self._write_epoch)
+            .option("checkpointLocation", self._checkpoint())
             .trigger(processingTime=f"{self.trigger_seconds} seconds")
             .start()
         )
         return self._query
+
+    def _checkpoint(self) -> str:
+        # lives OUTSIDE the lake root so compaction's directory swap can
+        # never clobber stream offsets
+        return self.checkpoint or (self.lake_root.rstrip("/") + "_checkpoint")
+
+    def _write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """One micro-batch, every format in one pass. Files are named
+        from the epoch, so a replayed epoch overwrites its own files;
+        epoch ids count per checkpoint, so the name also carries a hash
+        of the checkpoint path and streams sharing a lake never collide."""
+        stream = f"{zlib.crc32(self._checkpoint().encode()):08x}"
+        LogLake(self.lake_root).write_formats(batch_df, self.formats, f"{epoch_id:05d}-{stream}")
 
     def process_available(self) -> None:
         """Drain everything currently discoverable (test/backfill aid)."""
@@ -196,9 +196,9 @@ def compact_lake(
     snapshot = [f for fl in targets.values() for f in fl]
     df = spark.read.option("basePath", qroot.toString()).parquet(*snapshot)
     tmp_root = qroot.toString().rstrip("/") + f"_compacting_{uuidmod.uuid4().hex}"
-    # same physical layout as LogLake.write_batch: range-partitioned and
-    # sorted on (partition cols, time_ns) → disjoint-time files whose
-    # row groups zone-map-skip under --since predicates
+    # the same physical layout as LogLake.write_formats: files sorted on
+    # time_ns within each partition, covering disjoint time ranges, so
+    # their row groups zone-map-skip under --since predicates
     cols = [F.col(c) for c in NATIVE_PARTITIONING] + [F.col("time_ns")]
     (
         df.repartitionByRange(*cols)

@@ -174,6 +174,8 @@ def test_rolled_files_have_disjoint_time_ranges(spark, tmp_path):
     import glob as globmod
     import random
 
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
     import pyarrow.parquet as pq
 
     rng = random.Random(7)
@@ -190,7 +192,9 @@ def test_rolled_files_have_disjoint_time_ranges(spark, tmp_path):
         ["path", "value"],
     )
     lk = LogLake(str(tmp_path / "sorted"), max_records_per_file=1000)
-    lk.write_batch(parse_cri_lines(raw, path_col="path", cluster="c"))
+    records = parse_cri_lines(raw, path_col="path", cluster="c")
+    lk.write_batch(records)
+    lk.write_batch(records, fmt="arrow")
     stats = []
     for f in globmod.glob(f"{lk.root}/**/*.parquet", recursive=True):
         md = pq.ParquetFile(f).metadata
@@ -204,3 +208,18 @@ def test_rolled_files_have_disjoint_time_ranges(spark, tmp_path):
     stats.sort()
     assert len(stats) >= 3
     assert all(a[1] <= b[0] for a, b in zip(stats, stats[1:])), stats
+
+    # every file of either format is time-sorted, and the files of one
+    # format cover disjoint time ranges
+    for ext, read in (
+        ("parquet", pq.read_table),
+        ("arrow", lambda f: ipc.open_file(pa.memory_map(f)).read_all()),
+    ):
+        spans = []
+        for f in globmod.glob(f"{lk.root}/**/*.{ext}", recursive=True):
+            ns = read(f).column("time_ns").to_pylist()
+            assert ns == sorted(ns), f
+            spans.append((ns[0], ns[-1]))
+        spans.sort()
+        assert len(spans) == 3, (ext, spans)
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), (ext, spans)

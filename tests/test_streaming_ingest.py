@@ -284,3 +284,100 @@ def test_compaction_preserves_arrow_side(spark, pods_dir, tmp_path):
     assert len(globmod.glob(f"{lake_root}/**/*.arrow", recursive=True)) == n_arrow_before
     assert lake.read(spark, fmt="parquet").count() == 20
     assert lake.read(spark, fmt="arrow").count() == 20
+
+
+def _qa_records(spark, n, tag):
+    from kubernetes_logs_datalake_spark.sources import parse_cri_lines
+
+    raw = spark.createDataFrame(
+        [("/var/log/pods/qa_p_u/app/0.log", f"{ts(i)} stdout F {tag}-{i}") for i in range(n)],
+        ["path", "value"],
+    )
+    return parse_cri_lines(raw, path_col="path", cluster="c")
+
+
+def _lake_files(root, ext):
+    import glob as globmod
+
+    return sorted(globmod.glob(f"{root}/**/*.{ext}", recursive=True))
+
+
+def test_replayed_epoch_overwrites_its_own_files(spark, pods_dir, tmp_path):
+    """An epoch written twice (a replay after a crash before the offset
+    commit) leaves exactly one copy per format; the next epoch appends."""
+    lake_root = str(tmp_path / "lake7")
+    job = IngestJob(logs_dir=pods_dir, lake_root=lake_root, cluster="c")
+    rec = _qa_records(spark, 25, "e")
+    lake = LogLake(lake_root)
+    job._write_epoch(rec, 7)
+    files = {ext: _lake_files(lake_root, ext) for ext in ("parquet", "arrow")}
+    job._write_epoch(rec, 7)
+    assert {ext: _lake_files(lake_root, ext) for ext in files} == files
+    assert lake.read(spark, fmt="parquet").count() == 25
+    assert lake.read(spark, fmt="arrow").count() == 25
+    job._write_epoch(rec, 8)
+    assert lake.read(spark, fmt="parquet").count() == 50
+    assert lake.read(spark, fmt="arrow").count() == 50
+
+
+def test_write_batch_overwrite_raises_and_keeps_the_lake(spark, tmp_path):
+    """mode='overwrite' must not wipe the root (the other format and
+    every other partition live there): both formats refuse it before
+    writing anything."""
+    lake_root = str(tmp_path / "lake8")
+    lake = LogLake(lake_root)
+    rec = _qa_records(spark, 12, "k")
+    lake.write_batch(rec, fmt="parquet")
+    lake.write_batch(rec, fmt="arrow")
+    before = {ext: _lake_files(lake_root, ext) for ext in ("parquet", "arrow")}
+    for fmt in ("parquet", "arrow"):
+        with pytest.raises(ValueError, match="append"):
+            lake.write_batch(_qa_records(spark, 3, "new"), fmt=fmt, mode="overwrite")
+    assert {ext: _lake_files(lake_root, ext) for ext in before} == before
+    assert lake.read(spark, fmt="parquet").count() == 12
+    assert lake.read(spark, fmt="arrow").count() == 12
+
+
+def test_ingest_batch_runs_at_most_two_spark_jobs(spark, pods_dir, tmp_path):
+    """One non-empty dual-format micro-batch is one grouped pass: the
+    shuffle and its collect, no persist/isEmpty/range-sample jobs."""
+    for k in range(3):
+        write_log(pods_dir, f"ns{k}", "app-1", "app",
+                  [f"{ts(i)} stdout F j-{k}-{i}" for i in range(40)])
+    lake_root = str(tmp_path / "lake9")
+    job = IngestJob(logs_dir=pods_dir, lake_root=lake_root, cluster="dev", trigger_seconds=1)
+    query = job.start(spark)
+    try:
+        job.process_available()
+        batches = [p for p in query.recentProgress if p["numInputRows"]]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    finally:
+        job.stop_gracefully()
+    assert len(batches) == 1
+    assert 1 <= len(jobs) <= 2, jobs
+    lake = LogLake(lake_root)
+    assert lake.read(spark, fmt="parquet").count() == 120
+    assert lake.read(spark, fmt="arrow").count() == 120
+
+
+def test_partition_values_round_trip_in_both_formats(spark, tmp_path):
+    """Partition values that need escaping in a directory name (an EKS
+    cluster ARN holds ':' and '/', '%' and '+' are literal) and the
+    empty value (read back as null, as Spark writes it) read back the
+    same from both formats."""
+    from kubernetes_logs_datalake_spark.sources import parse_cri_lines
+
+    raw = spark.createDataFrame(
+        [("/var/log/pods/qa_p_u/app/0.log", f"{ts(i)} stdout F v-{i}") for i in range(4)],
+        ["path", "value"],
+    )
+    lake = LogLake(str(tmp_path / "lake10"))
+    clusters = ["arn:aws:eks:r:1:cluster/prod", "a%20b+c", ""]
+    for cl in clusters:
+        rec = parse_cri_lines(raw, path_col="path", cluster=cl)
+        lake.write_batch(rec, fmt="parquet")
+        lake.write_batch(rec, fmt="arrow")
+    want = {("arn:aws:eks:r:1:cluster/prod", 4), ("a%20b+c", 4), (None, 4)}
+    for fmt in ("parquet", "arrow"):
+        got = {(r.cluster, r["count"]) for r in lake.read(spark, fmt=fmt).groupBy("cluster").count().collect()}
+        assert got == want, fmt

@@ -9,16 +9,22 @@ uses, one session, REPS timed runs each with rep 1 discarded:
 
 - scan          raw text file scan only (read + count)
 - parse_noop    scan + CRI regex parse (JVM regexp_extract) -> noop sink
-- parquet_only  full streaming IngestJob, parquet sink only
-- arrow_only    full streaming IngestJob, arrow sink only
-                (applyInArrow per partition dir — the Python stage)
-- dual          the bench configuration (both sinks)
-- dual_batch    same parse + both sinks, BATCH mode (no streaming
-                machinery) — the stream-overhead delta
+- parquet_only  full streaming IngestJob, parquet files only
+- arrow_only    full streaming IngestJob, arrow files only
+- dual          the bench configuration (both formats). Every variant
+                runs the same one-pass writer: one groupBy(cluster,
+                namespace, date).applyInArrow per batch — the Python
+                stage — that sorts each partition by time_ns and writes
+                the requested formats from that one table; the
+                format-only variants isolate one format's file-writing
+                cost
+- dual_batch    same parse + the same one-pass writer, BATCH mode (no
+                streaming machinery, no persist) — the stream-overhead
+                delta
 - arrow_only_big_batches
                 arrow_only with spark.sql.execution.arrow.
                 maxRecordsPerBatch raised 10k -> 64k (does Arrow batch
-                sizing move the Python sink stage?)
+                sizing move the Python writer stage?)
 
 Usage: python tools/ingest_profile.py [sf] [reps]   (default 0.1 3)
 """
@@ -83,13 +89,9 @@ def _run_batch_dual(spark, logs_dir) -> float:
     rec = parse_cri_lines(
         raw, path_col="path", cluster="prof", node="local"
     )
-    rec.persist()
     try:
-        lake = LogLake(lake_root)
-        for fmt in ("parquet", "arrow"):
-            lake.write_batch(rec, fmt=fmt)
+        LogLake(lake_root).write_formats(rec, ("parquet", "arrow"), "profile")
     finally:
-        rec.unpersist()
         elapsed = time.time() - t0
         shutil.rmtree(lake_root, ignore_errors=True)
     return elapsed
