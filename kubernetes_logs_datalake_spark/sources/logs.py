@@ -41,8 +41,6 @@ from kubernetes_logs_datalake_spark.functions.time_ns import ns_to_timestamp
 from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
 from kubernetes_logs_datalake_spark.sources.arrow_ipc import _resolve_fs, read_arrow, write_arrow_file
 
-FORMATS = ("parquet", "arrow")
-
 # Parquet dictionary pages only where values repeat; time and message
 # are near-unique per row, where a dictionary only costs bytes.
 PARQUET_DICT_COLUMNS = ["stream", "logtag", "node", "pod", "container"]
@@ -65,7 +63,11 @@ def _partition_value_from_dir(name: F.Column) -> F.Column:
     discovery decodes Parquet directories: ``+`` is literal, and a name
     that is not valid escaping is taken as it is."""
     decoded = F.try_url_decode(F.regexp_replace(name, r"\+", "%2B"))
-    return F.when(name != HIVE_DEFAULT_PARTITION, F.coalesce(decoded, name))
+    return (
+        F.when(name == HIVE_DEFAULT_PARTITION, None)
+        .when(name.contains("%"), F.coalesce(decoded, name))  # decode only escaped names
+        .otherwise(name)
+    )
 
 
 def _write_parquet_file(table: pa.Table, dest: str) -> None:
@@ -157,7 +159,7 @@ class LogLake:
         """
         if self.layout != "native":
             raise ValueError("the lake writer supports the native hive layout only")
-        unknown = [f for f in formats if f not in FORMATS]
+        unknown = [f for f in formats if f not in ("parquet", "arrow")]
         if unknown:
             raise ValueError(f"unknown format {unknown[0]!r}")
         root, parts, max_rows = self.root.rstrip("/"), NATIVE_PARTITIONING, self.max_records_per_file
