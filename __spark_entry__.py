@@ -10807,7 +10807,13 @@ def _ddb_kmeans_ctes(
     expression string spliced into the seeds ``LIMIT`` — the √n-cells
     oracles pass ``_ddb_sqrt_cells_limit`` so the oracle
     re-parameterizes from the SAME corpus count as the Spark side
-    (``_sqrt_cells``) instead of hard-coding one SF's answer."""
+    (``_sqrt_cells``) instead of hard-coding one SF's answer.
+
+    Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and each
+    ``cent{n}`` reads ``cent{n-1}`` twice (directly and through
+    ``a{n}``), so an inlined chain doubles per iteration and re-plans
+    ``src`` (for the rotated oracles, a 64x64 literal matrix product)
+    every time: minutes of planning per query instead of seconds."""
     p = prefix
 
     def d2_expr() -> str:
@@ -10816,7 +10822,7 @@ def _ddb_kmeans_ctes(
 
     def assign(n: int, cent: str) -> str:
         return f"""
-            {p}a{n} AS (
+            {p}a{n} AS MATERIALIZED (
                 SELECT vec_id, j, d2,
                        row_number() OVER (PARTITION BY vec_id ORDER BY d2, j) AS rk
                 FROM (SELECT e.vec_id, c.j, {d2_expr()} AS d2
@@ -10824,7 +10830,7 @@ def _ddb_kmeans_ctes(
 
     def update(n: int, prev_cent: str) -> str:
         return f"""
-            {p}upd{n} AS (
+            {p}upd{n} AS MATERIALIZED (
                 SELECT cluster AS j, u.pos,
                        floor((CAST(sum(CAST(floor(CAST(u.val AS DOUBLE)
                                                   * 10000000000.0 + 0.5)
@@ -10837,20 +10843,20 @@ def _ddb_kmeans_ctes(
                      unnest(list_transform(range(1, len(x.embedding) + 1),
                             i -> {{'pos': i - 1, 'val': x.embedding[i]}})) AS t(u)
                 GROUP BY cluster, u.pos),
-            {p}newc{n} AS (SELECT j, list(val ORDER BY pos) AS cvec FROM {p}upd{n} GROUP BY j),
-            {p}cent{n} AS (
+            {p}newc{n} AS MATERIALIZED (SELECT j, list(val ORDER BY pos) AS cvec FROM {p}upd{n} GROUP BY j),
+            {p}cent{n} AS MATERIALIZED (
                 SELECT c.j, COALESCE(nw.cvec, c.cvec) AS cvec
                 FROM {prev_cent} c LEFT JOIN {p}newc{n} nw ON nw.j = c.j)"""
 
     parts = [f"""
-            {p}corpus AS (SELECT vec_id, embedding FROM {src}),
-            {p}seeds AS (
+            {p}corpus AS MATERIALIZED (SELECT vec_id, embedding FROM {src}),
+            {p}seeds AS MATERIALIZED (
                 SELECT CAST(row_number() OVER (
                            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT) AS j,
                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
                 FROM {p}corpus
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}),
-            {p}cent0 AS (SELECT j, cvec FROM {p}seeds)"""]
+            {p}cent0 AS MATERIALIZED (SELECT j, cvec FROM {p}seeds)"""]
     cent = f"{p}cent0"
     for n in range(1, iters + 1):
         parts.append(assign(n, cent))

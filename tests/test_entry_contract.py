@@ -9,8 +9,6 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_entry_returns_rows(spark):
     df = entrymod.entry(spark)
@@ -24,9 +22,7 @@ def test_oracle_keys_subset_of_queries():
     assert not extra, f"oracle_sql keys without queries: {extra}"
 
 
-def test_all_queries_run_at_sf0001(spark):
-    qs = entrymod.queries()
-    for name, fn in qs.items():
-        df = fn(spark, SF)
+def test_all_queries_run_at_sf0001(registry_frames):
+    for name, df in registry_frames.items():
         n = df.count()
         assert n >= 0, name

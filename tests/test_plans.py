@@ -15,19 +15,6 @@ import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
 
-# One registry-wide DataFrame build, shared by every whole-registry
-# gate below (each fn(spark, SF) call re-runs any eager fit/collect the
-# query does, so building 200+ frames twice would double suite time).
-_REGISTRY_FRAMES: dict = {}
-
-
-def _registry_frames(spark) -> dict:
-    if not _REGISTRY_FRAMES:
-        for name, fn in entrymod.queries().items():
-            _REGISTRY_FRAMES[name] = fn(spark, SF)
-    return _REGISTRY_FRAMES
-
-
 def plan_of(spark, name: str) -> str:
     # default metadata truncation (100 chars) hides ReadSchema/filters
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
@@ -77,12 +64,12 @@ def test_aggregations_have_partial_phase(spark):
     assert p.count("HashAggregate") >= 2
 
 
-def test_no_python_udfs_in_oracle_queries(spark):
+def test_no_python_udfs_in_oracle_queries(spark, registry_frames):
     """Every oracle-checked query must stay JVM-side (no BatchEvalPython
     / ArrowEvalPython nodes) — Python appears only in explicitly
     Arrow-batched operators (multimodal, arrow sink)."""
     for name in entrymod.oracle_sql():
-        p = plan_of(spark, name)
+        p = registry_frames[name]._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in p, f"{name} fell back to a Python UDF"
 
 
@@ -147,7 +134,7 @@ def test_embedding_lsh_no_nested_loop(spark):
     assert "HashJoin" in p or "SortMergeJoin" in p
 
 
-def test_no_unpartitioned_window_in_contract_queries(spark):
+def test_no_unpartitioned_window_in_contract_queries(spark, registry_frames):
     """No contract query may contain an unpartitioned WindowExec — the
     plan shape that moves the ENTIRE input to one partition (Spark
     itself warns 'serious performance degradation'). An unpartitioned
@@ -156,7 +143,7 @@ def test_no_unpartitioned_window_in_contract_queries(spark):
     Window node. (This gate would have caught r2's global-ntile
     doc_length_bins.)"""
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    for name, df in _registry_frames(spark).items():
+    for name, df in registry_frames.items():
         lines = (
             df._jdf.queryExecution().executedPlan().toString().splitlines()
         )
@@ -169,7 +156,7 @@ def test_no_unpartitioned_window_in_contract_queries(spark):
             )
 
 
-def test_registry_canon_hashable_output_types(spark):
+def test_registry_canon_hashable_output_types(registry_frames):
     """Driver-canon gate: no registered query may emit a top-level
     array/map/struct column. The driver's pandas canonicalization
     hashes scalar cells, so a nested output type is a guaranteed red
@@ -178,7 +165,7 @@ def test_registry_canon_hashable_output_types(spark):
     Complex payloads ride as joined strings or hex instead."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    for name, df in _registry_frames(spark).items():
+    for name, df in registry_frames.items():
         for f in df.schema.fields:
             assert not isinstance(f.dataType, (ArrayType, MapType, StructType)), (
                 f"{name}.{f.name} has driver-unhashable type {f.dataType.simpleString()}"
