@@ -84,6 +84,40 @@ def s3a_conf(
     return conf
 
 
+S3A_KEYS = (
+    "fs.s3a.endpoint",
+    "fs.s3a.access.key",
+    "fs.s3a.secret.key",
+    "fs.s3a.path.style.access",
+    "fs.s3a.connection.ssl.enabled",
+)
+
+
+def pyarrow_s3_options(conf: dict[str, str | None]) -> dict:
+    """The S3A settings :func:`s3a_conf` sets (Hadoop ``fs.s3a.*`` keys,
+    as in ``SparkContext.hadoopConfiguration``) as
+    ``pyarrow.fs.S3FileSystem`` arguments, so the lake writer's pyarrow
+    sink reaches the same store as Spark's Hadoop reads. An endpoint's
+    own ``http://``/``https://`` scheme wins over the SSL flag, as in S3A;
+    pyarrow addresses an overridden endpoint path-style, so Hadoop's
+    virtual-host default must be asked for explicitly."""
+    opts: dict = {}
+    if conf.get("fs.s3a.connection.ssl.enabled") == "false":
+        opts["scheme"] = "http"
+    endpoint = conf.get("fs.s3a.endpoint")
+    if endpoint:
+        scheme, sep, host = endpoint.partition("://")
+        if sep:
+            opts["scheme"], endpoint = scheme, host
+        opts["endpoint_override"] = endpoint.rstrip("/")
+        if conf.get("fs.s3a.path.style.access") != "true":
+            opts["force_virtual_addressing"] = True
+    if conf.get("fs.s3a.access.key") and conf.get("fs.s3a.secret.key"):
+        opts["access_key"] = conf["fs.s3a.access.key"]
+        opts["secret_key"] = conf["fs.s3a.secret.key"]
+    return opts
+
+
 def get_spark(
     app_name: str = "kubernetes-logs-datalake-spark",
     master: str | None = None,

@@ -20,7 +20,10 @@ chosen at ``:399-402``). Spark has no Arrow IPC file source, so:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import contextlib
+import posixpath
+import uuid
+from collections.abc import Callable, Iterator
 
 import pyarrow as pa
 import pyarrow.feather as feather
@@ -160,7 +163,7 @@ def read_arrow(
 # --------------------------------------------------------------------- write
 
 
-def _resolve_fs(dest: str):
+def _resolve_fs(dest: str, s3: dict | None = None):
     """``(pyarrow.fs.FileSystem, path)`` for a destination URI.
 
     Runs executor-side (inside ``applyInArrow`` workers, where no JVM —
@@ -169,6 +172,9 @@ def _resolve_fs(dest: str):
     ``s3n://`` (the Hadoop S3 connector schemes the reference's lake
     uses, ``fluent-bit.conf:32-45``) map onto pyarrow's S3FileSystem;
     ``file://`` and scheme-less paths resolve to the local filesystem.
+    ``s3`` carries the session's S3A settings as S3FileSystem arguments
+    (:func:`kubernetes_logs_datalake_spark.session.pyarrow_s3_options`),
+    so writes reach the same endpoint the Hadoop reads do.
     This is the write-side mirror of the reader's ``binaryFile`` +
     ``BufferReader`` object-store path.
     """
@@ -177,6 +183,8 @@ def _resolve_fs(dest: str):
     uri = _normalize_uri(dest)
     if "://" not in uri:
         return pafs.LocalFileSystem(), uri
+    if s3 is not None and uri.startswith("s3://"):
+        return pafs.S3FileSystem(**s3), uri.split("://", 1)[1]
     return _fs_from_uri(uri)
 
 
@@ -213,14 +221,33 @@ def _to_arrow_compact(table: pa.Table) -> pa.Table:
     return pa.table(cols)
 
 
-def write_arrow_file(table: pa.Table, dest: str) -> None:
+def write_via_hidden_name(dest: str, write: Callable[[pa.NativeFile], None], s3: dict | None = None) -> None:
+    """Write ``dest`` under a hidden name in its directory, then move it
+    into place. Spark's file listing (Parquet, ``binaryFile``, the file
+    stream source) skips names that start with ``.``, so a query running
+    while ingest writes, or after a crash mid-write, never lists a torn
+    file; a replayed write moves its new copy over the old one."""
+    filesystem, path = _resolve_fs(dest, s3)
+    parent, _, name = path.rpartition("/")
+    if parent:
+        filesystem.create_dir(parent, recursive=True)
+    tmp = posixpath.join(parent, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        with filesystem.open_output_stream(tmp) as sink:
+            write(sink)
+        filesystem.move(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            filesystem.delete_file(tmp)
+        raise
+
+
+def write_arrow_file(table: pa.Table, dest: str, s3: dict | None = None) -> None:
     """One Feather-v2 file: ZSTD bodies + compacted columns — the same
     storage contract the reference's writer produces. ``dest`` may be a
     local path or any ``pyarrow.fs``-resolvable URI (``file://``,
     ``s3://``/``s3a://``) — writes go through the filesystem's output
-    stream, never ``os`` local-path calls."""
-    filesystem, path = _resolve_fs(dest)
-    if "/" in path:
-        filesystem.create_dir(path.rsplit("/", 1)[0], recursive=True)
-    with filesystem.open_output_stream(path) as sink:
-        feather.write_feather(_to_arrow_compact(table), sink, compression="zstd")
+    stream (:func:`write_via_hidden_name`), never ``os`` local-path calls."""
+    write_via_hidden_name(
+        dest, lambda sink: feather.write_feather(_to_arrow_compact(table), sink, compression="zstd"), s3
+    )

@@ -39,7 +39,13 @@ from pyspark.sql import functions as F
 
 from kubernetes_logs_datalake_spark.functions.time_ns import ns_to_timestamp
 from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
-from kubernetes_logs_datalake_spark.sources.arrow_ipc import _resolve_fs, read_arrow, write_arrow_file
+from kubernetes_logs_datalake_spark.session import S3A_KEYS, pyarrow_s3_options
+from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
+    _normalize_uri,
+    read_arrow,
+    write_arrow_file,
+    write_via_hidden_name,
+)
 
 # Parquet dictionary pages only where values repeat; time and message
 # are near-unique per row, where a dictionary only costs bytes.
@@ -70,18 +76,25 @@ def _partition_value_from_dir(name: F.Column) -> F.Column:
     )
 
 
-def _write_parquet_file(table: pa.Table, dest: str) -> None:
+def _write_parquet_file(table: pa.Table, dest: str, s3: dict | None = None) -> None:
     """One ZSTD Parquet file (level 3, parquet-mr's default) with a
-    delta-encoded time, through the same ``pyarrow.fs`` resolution as
-    the Arrow sink."""
-    filesystem, path = _resolve_fs(dest)
-    filesystem.create_dir(path.rsplit("/", 1)[0], recursive=True)
+    delta-encoded time, through the same hidden-name-then-move sink as
+    the Arrow files."""
     delta = {c: "DELTA_BINARY_PACKED" for c in ("time_ns", "time") if c in table.column_names}
-    pq.write_table(
-        table, path, filesystem=filesystem, compression="zstd", compression_level=3,
+    write_via_hidden_name(dest, lambda sink: pq.write_table(
+        table, sink, compression="zstd", compression_level=3,
         use_dictionary=[c for c in PARQUET_DICT_COLUMNS if c in table.column_names],
         column_encoding=delta,
-    )
+    ), s3)
+
+
+def _s3_options(spark: SparkSession, root: str) -> dict | None:
+    """The session's S3A settings as pyarrow S3 options for an object-store
+    root (read on the driver; workers have no JVM), else ``None``."""
+    if not _normalize_uri(root).startswith("s3://"):
+        return None
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return pyarrow_s3_options({k: hconf.get(k) for k in S3A_KEYS})
 
 
 def _ensure_date(df: DataFrame) -> DataFrame:
@@ -120,8 +133,9 @@ def _normalize_time(df: DataFrame) -> DataFrame:
 class LogLake:
     """A log lake rooted at ``root`` (local path or object-store URI —
     reads go through the Hadoop filesystem layer and writes through
-    ``pyarrow.fs``, which maps ``s3a://`` onto its S3 filesystem, so the
-    same root works unchanged on a cluster)."""
+    ``pyarrow.fs``, which maps ``s3a://`` onto its S3 filesystem with the
+    session's S3A endpoint and keys, so the same root works unchanged on
+    a cluster)."""
 
     root: str
     layout: str = "native"  # native | positional
@@ -153,8 +167,10 @@ class LogLake:
         ``part-<batch_id>-<slice>.parquet`` (``time_ns`` + µs ``time``)
         and/or ``.arrow`` (no µs ``time``). Sorted slices cover disjoint
         time ranges, so ``--since`` skips whole files and row groups.
-        At most two Spark jobs, nothing persisted; the same rows written
-        again under the same ``batch_id`` overwrite their files.
+        At most two Spark jobs, nothing persisted. Each file is written
+        under a hidden name and moved into place, so readers never list a
+        half-written file, and the same rows written again under the same
+        ``batch_id`` replace their files.
         Native layout only: the positional layout is read-only.
         """
         if self.layout != "native":
@@ -163,6 +179,7 @@ class LogLake:
         if unknown:
             raise ValueError(f"unknown format {unknown[0]!r}")
         root, parts, max_rows = self.root.rstrip("/"), NATIVE_PARTITIONING, self.max_records_per_file
+        s3 = _s3_options(df.sparkSession, root)
 
         def write_group(key: tuple, table: pa.Table) -> pa.Table:
             rel = "/".join(f"{c}={_partition_dir_value(v.as_py())}" for c, v in zip(parts, key))
@@ -172,9 +189,9 @@ class LogLake:
                 part = table.slice(start, max_rows)
                 dest = f"{root}/{rel}/part-{batch_id}-{i:05d}"
                 if "parquet" in formats:
-                    _write_parquet_file(part, dest + ".parquet")
+                    _write_parquet_file(part, dest + ".parquet", s3)
                 if "arrow" in formats:
-                    write_arrow_file(part.select(arrow_cols), dest + ".arrow")
+                    write_arrow_file(part.select(arrow_cols), dest + ".arrow", s3)
             return pa.table({"rows": [table.num_rows]})
 
         _ensure_date(df).groupBy(*parts).applyInArrow(write_group, "rows long").collect()

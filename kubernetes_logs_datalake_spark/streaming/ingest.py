@@ -40,7 +40,7 @@ one grouped write per batch, and a periodic compaction pass for small files
 
 from __future__ import annotations
 
-import zlib
+import json
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +66,7 @@ class IngestJob:
     exclude_container: str | None = DEFAULT_EXCLUDE
     checkpoint: str | None = None
     _query: object = field(default=None, repr=False)
+    _stream: str | None = field(default=None, repr=False)
 
     # ------------------------------------------------------------ plan
 
@@ -91,6 +92,7 @@ class IngestJob:
     # ------------------------------------------------------------- run
 
     def start(self, spark: SparkSession):
+        self._stream = None  # re-read: a new checkpoint is a new query
         self._query = (
             self.records(spark)
             .writeStream.foreachBatch(self._write_epoch)
@@ -107,11 +109,14 @@ class IngestJob:
 
     def _write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One micro-batch, every format in one pass. Files are named
-        from the epoch, so a replayed epoch overwrites its own files;
-        epoch ids count per checkpoint, so the name also carries a hash
-        of the checkpoint path and streams sharing a lake never collide."""
-        stream = f"{zlib.crc32(self._checkpoint().encode()):08x}"
-        LogLake(self.lake_root).write_formats(batch_df, self.formats, f"{epoch_id:05d}-{stream}")
+        ``part-<epoch>-<query id>-<slice>``: a replayed epoch overwrites
+        its own files, and the query id Spark keeps in the checkpoint
+        tells apart the streams (one per node) that share a lake, whose
+        epoch ids all count from 0 and whose node-local checkpoints may
+        all have the same path."""
+        if self._stream is None:
+            self._stream = _checkpoint_query_id(batch_df.sparkSession, self._checkpoint())
+        LogLake(self.lake_root).write_formats(batch_df, self.formats, f"{epoch_id:05d}-{self._stream}")
 
     def process_available(self) -> None:
         """Drain everything currently discoverable (test/backfill aid)."""
@@ -127,6 +132,19 @@ class IngestJob:
             self._query.processAllAvailable()
             self._query.stop()
             self._query.awaitTermination(30)
+
+
+def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str:
+    """The query id (hex) Spark writes to ``<checkpoint>/metadata`` as a
+    JSON line when a query first starts there, and keeps across restarts."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint.rstrip("/") + "/metadata")
+    stream = path.getFileSystem(sc._jsc.hadoopConfiguration()).open(path)
+    reader = sc._jvm.java.io.BufferedReader(sc._jvm.java.io.InputStreamReader(stream, "UTF-8"))
+    try:
+        return json.loads(reader.readLine())["id"].replace("-", "")
+    finally:
+        reader.close()
 
 
 def _parquet_files_by_dir(fs, root) -> dict[str, list[str]]:

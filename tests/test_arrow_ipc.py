@@ -166,6 +166,53 @@ def test_resolve_fs_schemes(monkeypatch):
     assert f == "S3STUB" and p == "bucket/k/v.arrow"
 
 
+def test_resolve_fs_builds_s3_from_session_options(monkeypatch):
+    """With S3 options (the session's S3A endpoint and keys) an s3a URI
+    gets an S3FileSystem built from exactly those options, not the
+    AWS defaults ``from_uri`` would pick; the constructor is stubbed so
+    nothing tries to reach a store."""
+    from pyarrow import fs as pafs
+
+    from kubernetes_logs_datalake_spark.sources.arrow_ipc import _resolve_fs
+
+    seen = {}
+    monkeypatch.setattr(pafs, "S3FileSystem", lambda **kw: seen.setdefault("kw", kw))
+    opts = {"scheme": "http", "endpoint_override": "localhost:30070"}
+    f, p = _resolve_fs("s3a://bucket/k/v.arrow", opts)
+    assert seen["kw"] == opts and f is seen["kw"] and p == "bucket/k/v.arrow"
+    f, p = _resolve_fs("/local/x.arrow", opts)
+    assert isinstance(f, pafs.LocalFileSystem) and p == "/local/x.arrow"
+
+
+def test_files_appear_only_when_complete(tmp_path):
+    """A lake file is written under a hidden name (skipped by Spark's
+    listing) and moved into place: while it is written, and after a
+    write that fails half way, only the complete old copy is visible."""
+    import os
+
+    from kubernetes_logs_datalake_spark.sources.arrow_ipc import write_via_hidden_name
+
+    dest = tmp_path / "d" / "part-0.parquet"
+    during = []
+
+    def write(sink):
+        sink.write(b"whole")
+        during.extend(os.listdir(dest.parent))
+
+    write_via_hidden_name(str(dest), write)
+    assert len(during) == 1 and during[0].startswith(".")
+    assert os.listdir(dest.parent) == ["part-0.parquet"]
+
+    def torn(sink):
+        sink.write(b"ha")
+        raise RuntimeError("killed mid-write")
+
+    with pytest.raises(RuntimeError):
+        write_via_hidden_name(str(dest), torn)
+    assert os.listdir(dest.parent) == ["part-0.parquet"]
+    assert dest.read_bytes() == b"whole"
+
+
 def test_read_arrow_rejects_heterogeneous_schema(spark, tmp_path):
     """A file whose schema differs from the probe must fail with a clear
     error naming the file, not an opaque mapInArrow crash."""

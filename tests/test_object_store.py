@@ -14,7 +14,7 @@ import glob as globmod
 
 from pyspark.sql import functions as F
 
-from kubernetes_logs_datalake_spark.session import s3a_conf
+from kubernetes_logs_datalake_spark.session import pyarrow_s3_options, s3a_conf
 from kubernetes_logs_datalake_spark.sources import parse_cri_lines
 from kubernetes_logs_datalake_spark.sources.logs import LogLake
 from kubernetes_logs_datalake_spark.streaming.ingest import compact_lake
@@ -59,6 +59,43 @@ def test_s3a_conf_from_env(monkeypatch):
     assert conf["spark.hadoop.fs.s3a.endpoint"] == "https://s3.example"
     assert conf["spark.hadoop.fs.s3a.access.key"] == "envak"
     assert conf["spark.hadoop.fs.s3a.connection.ssl.enabled"] == "true"
+
+
+def test_pyarrow_s3_options_follow_s3a_conf():
+    """The lake writer's pyarrow S3 sink gets the endpoint, scheme,
+    addressing style and keys the S3A conf gives Spark's reads."""
+    conf = s3a_conf(endpoint="http://localhost:30070/", access_key="ak", secret_key="sk")
+    hadoop = {k.removeprefix("spark.hadoop."): v for k, v in conf.items()}
+    assert pyarrow_s3_options(hadoop) == {
+        "scheme": "http", "endpoint_override": "localhost:30070",
+        "access_key": "ak", "secret_key": "sk",
+    }
+    # no scheme in the endpoint: the SSL flag decides; S3A's default
+    # virtual-host addressing must be asked of pyarrow explicitly
+    assert pyarrow_s3_options(
+        {"fs.s3a.endpoint": "minio:9000", "fs.s3a.connection.ssl.enabled": "false"}
+    ) == {"scheme": "http", "endpoint_override": "minio:9000", "force_virtual_addressing": True}
+    assert pyarrow_s3_options({"fs.s3a.access.key": "ak"}) == {}
+
+
+def test_lake_writer_reads_s3a_settings_from_the_session(spark):
+    """The driver hands the session's Hadoop S3A settings to the
+    executor-side writer for an object-store root, and none for a local one."""
+    from kubernetes_logs_datalake_spark.sources.logs import _s3_options
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    keys = {"fs.s3a.endpoint": "https://minio.local:9000", "fs.s3a.path.style.access": "true"}
+    saved = {k: hconf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            hconf.set(k, v)
+        assert _s3_options(spark, "s3a://bucket/lake") == {
+            "scheme": "https", "endpoint_override": "minio.local:9000",
+        }
+        assert _s3_options(spark, "file:///tmp/lake") is None
+    finally:
+        for k, v in saved.items():
+            hconf.unset(k) if v is None else hconf.set(k, v)
 
 
 def test_lake_write_read_compact_on_qualified_uri(spark, tmp_path):

@@ -306,18 +306,40 @@ def test_replayed_epoch_overwrites_its_own_files(spark, pods_dir, tmp_path):
     """An epoch written twice (a replay after a crash before the offset
     commit) leaves exactly one copy per format; the next epoch appends."""
     lake_root = str(tmp_path / "lake7")
-    job = IngestJob(logs_dir=pods_dir, lake_root=lake_root, cluster="c")
+    write_log(pods_dir, "qa", "app-1", "app", [f"{ts(i)} stdout F s-{i}" for i in range(5)])
+    job = IngestJob(logs_dir=pods_dir, lake_root=lake_root, cluster="c", trigger_seconds=1)
+    job.start(spark)
+    job.stop_gracefully()  # epoch 0 from the stream; the checkpoint now has its query id
     rec = _qa_records(spark, 25, "e")
     lake = LogLake(lake_root)
     job._write_epoch(rec, 7)
     files = {ext: _lake_files(lake_root, ext) for ext in ("parquet", "arrow")}
     job._write_epoch(rec, 7)
     assert {ext: _lake_files(lake_root, ext) for ext in files} == files
-    assert lake.read(spark, fmt="parquet").count() == 25
-    assert lake.read(spark, fmt="arrow").count() == 25
+    assert lake.read(spark, fmt="parquet").count() == 30
+    assert lake.read(spark, fmt="arrow").count() == 30
     job._write_epoch(rec, 8)
-    assert lake.read(spark, fmt="parquet").count() == 50
-    assert lake.read(spark, fmt="arrow").count() == 50
+    assert lake.read(spark, fmt="parquet").count() == 55
+    assert lake.read(spark, fmt="arrow").count() == 55
+
+
+def test_streams_with_the_same_checkpoint_path_keep_each_others_files(spark, tmp_path):
+    """One stream per node into one lake, each node's checkpoint at the
+    same path on its own disk (a hostPath mount): node B's epoch 0 lands
+    in the same partition directory as node A's and must not replace it."""
+    lake_root, ckpt = str(tmp_path / "lake11"), str(tmp_path / "ckpt")
+    for node in ("node-a", "node-b"):
+        logs = str(tmp_path / f"logs-{node}")
+        write_log(logs, "qa", "app-1", "app", [f"{ts(i)} stdout F {node}-{i}" for i in range(10)])
+        job = IngestJob(logs_dir=logs, lake_root=lake_root, cluster="c", node=node,
+                        checkpoint=ckpt, trigger_seconds=1)
+        job.start(spark)
+        job.stop_gracefully()
+        os.rename(ckpt, f"{ckpt}-{node}")  # the next node's checkpoint is another disk
+    lake = LogLake(lake_root)
+    for fmt in ("parquet", "arrow"):
+        got = {r.node: r["count"] for r in lake.read(spark, fmt=fmt).groupBy("node").count().collect()}
+        assert got == {"node-a": 10, "node-b": 10}, fmt
 
 
 def test_write_batch_overwrite_raises_and_keeps_the_lake(spark, tmp_path):
