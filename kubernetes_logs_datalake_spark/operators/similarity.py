@@ -888,16 +888,6 @@ def ivf_knn_join(
     )
 
 
-def _flat_sum(terms: list):
-    """Flat ascending left-associative sum ``t₁ + t₂ + …`` — NOT a HOF
-    fold (interpreted) and IEEE-identical to DuckDB's sequential
-    ``list_sum`` (0.0 + t₁ = t₁), the sq8_topk_packed parity recipe."""
-    import functools
-    import operator as _op
-
-    return functools.reduce(_op.add, terms)
-
-
 def _sq8_shifted_decoded_terms(
     codes, mins: list, inv: list, dim: int
 ) -> list:

@@ -12,6 +12,7 @@ total executor cores; AQE coalesces the excess at runtime).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -84,37 +85,28 @@ def s3a_conf(
     return conf
 
 
-S3A_KEYS = (
-    "fs.s3a.endpoint",
-    "fs.s3a.access.key",
-    "fs.s3a.secret.key",
-    "fs.s3a.path.style.access",
-    "fs.s3a.connection.ssl.enabled",
-)
-
-
-def pyarrow_s3_options(conf: dict[str, str | None]) -> dict:
-    """The S3A settings :func:`s3a_conf` sets (Hadoop ``fs.s3a.*`` keys,
-    as in ``SparkContext.hadoopConfiguration``) as
+def pyarrow_s3_options(get: Callable[[str], str | None]) -> dict:
+    """The S3A settings :func:`s3a_conf` sets, looked up by their Hadoop
+    ``fs.s3a.*`` keys (``hadoopConfiguration().get``), as
     ``pyarrow.fs.S3FileSystem`` arguments, so the lake writer's pyarrow
     sink reaches the same store as Spark's Hadoop reads. An endpoint's
     own ``http://``/``https://`` scheme wins over the SSL flag, as in S3A;
     pyarrow addresses an overridden endpoint path-style, so Hadoop's
     virtual-host default must be asked for explicitly."""
     opts: dict = {}
-    if conf.get("fs.s3a.connection.ssl.enabled") == "false":
+    if get("fs.s3a.connection.ssl.enabled") == "false":
         opts["scheme"] = "http"
-    endpoint = conf.get("fs.s3a.endpoint")
+    endpoint = get("fs.s3a.endpoint")
     if endpoint:
         scheme, sep, host = endpoint.partition("://")
         if sep:
             opts["scheme"], endpoint = scheme, host
         opts["endpoint_override"] = endpoint.rstrip("/")
-        if conf.get("fs.s3a.path.style.access") != "true":
+        if get("fs.s3a.path.style.access") != "true":
             opts["force_virtual_addressing"] = True
-    if conf.get("fs.s3a.access.key") and conf.get("fs.s3a.secret.key"):
-        opts["access_key"] = conf["fs.s3a.access.key"]
-        opts["secret_key"] = conf["fs.s3a.secret.key"]
+    access_key, secret_key = get("fs.s3a.access.key"), get("fs.s3a.secret.key")
+    if access_key and secret_key:
+        opts["access_key"], opts["secret_key"] = access_key, secret_key
     return opts
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import contextlib
 import posixpath
+import re
 import uuid
 from collections.abc import Callable, Iterator
 
@@ -33,6 +34,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 DICT_COLUMNS = ("stream", "logtag")
+
+# Spark's escaping of hive partition values in directory names
+# (ExternalCatalogUtils.escapePathName), so partition discovery reads
+# back the exact value: '/' or ':' in a cluster name stays one level.
+_HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # null or empty value
+
+
+def hive_dir_value(value) -> str:
+    """A partition value as it is written in a ``<column>=<value>`` directory name."""
+    if value is None or value == "":
+        return HIVE_DEFAULT_PARTITION
+    return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in str(value))
+
+
+def hive_value_from_dir(name: str) -> str | None:
+    """Inverse of :func:`hive_dir_value`, as Spark's partition discovery
+    decodes Parquet directories (``unescapePathName``): each ``%XX`` is
+    one character, anything else (``+``, a stray ``%``) is literal."""
+    if name == HIVE_DEFAULT_PARTITION:
+        return None
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
 
 
 # ---------------------------------------------------------------------- read
@@ -52,8 +75,9 @@ def _normalized_arrow_schema(schema: pa.Schema) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _decode_schema(schema: pa.Schema, with_filename: bool) -> T.StructType:
-    """Spark schema for an IPC file schema (ns timestamps → long)."""
+def _decode_schema(schema: pa.Schema, with_filename: bool, partitions: tuple[str, ...] = ()) -> T.StructType:
+    """Spark schema for an IPC file schema (ns timestamps → long), then
+    the string ``partitions`` and ``_file``."""
     fields = []
     for f in schema:
         typ = f.type
@@ -64,6 +88,7 @@ def _decode_schema(schema: pa.Schema, with_filename: bool) -> T.StructType:
         else:
             spark_t = T.StructType.fromDDL(f"x {_arrow_to_ddl(typ)}")[0].dataType
         fields.append(T.StructField(f.name, spark_t, True))
+    fields += [T.StructField(p, T.StringType(), True) for p in partitions]
     if with_filename:
         fields.append(T.StructField("_file", T.StringType(), False))
     return T.StructType(fields)
@@ -89,8 +114,10 @@ def _arrow_to_ddl(typ: pa.DataType) -> str:
     raise TypeError(f"unsupported arrow type in IPC source: {typ}")
 
 
-def _normalize_batch(table: pa.Table, fname: str, with_filename: bool) -> pa.Table:
-    """Dictionary→plain decode; ns-timestamp→int64; optional filename."""
+def _normalize_batch(table: pa.Table, fname: str, with_filename: bool, partitions: tuple[str, ...] = ()) -> pa.Table:
+    """Dictionary→plain decode; ns-timestamp→int64; the file's hive
+    ``partitions`` values (one per file, from its directory names);
+    optional filename."""
     cols = []
     for name in table.column_names:
         col = table.column(name)
@@ -100,13 +127,17 @@ def _normalize_batch(table: pa.Table, fname: str, with_filename: bool) -> pa.Tab
             col = col.cast(pa.int64())
         cols.append(col)
     out = pa.table(dict(zip(table.column_names, cols)))
+    dirs = dict(d.split("=", 1) for d in fname.split("/")[:-1] if "=" in d)  # deepest wins
+    for part in partitions:
+        value = hive_value_from_dir(dirs[part]) if part in dirs else None
+        out = out.append_column(part, pa.array([value] * len(out), pa.string()))
     if with_filename:
         out = out.append_column("_file", pa.array([fname] * len(out), pa.string()))
     return out
 
 
 def read_arrow(
-    spark: SparkSession, path_glob: str, with_filename: bool = True
+    spark: SparkSession, path_glob: str, with_filename: bool = True, partitions: tuple[str, ...] = ()
 ) -> DataFrame:
     """Read Arrow IPC files matching a glob as a DataFrame.
 
@@ -118,6 +149,9 @@ def read_arrow(
     (``s3a://``, ``abfs://``, local), matching the reference's S3-glob
     reads. Decode scales with the number of files, not driver memory;
     the ingest layer bounds file sizes (~1 MB-class micro-batches).
+    ``partitions`` names hive partition columns (``<column>=<value>``
+    directories) that the files do not hold; each is recovered once per
+    file from its path, as Spark's Parquet source does.
     """
     reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.arrow")
     if any(ch in path_glob for ch in "*?["):
@@ -133,7 +167,8 @@ def read_arrow(
     if not sample:
         raise FileNotFoundError(f"no .arrow files match {path_glob}")
     probe = ipc.open_file(pa.BufferReader(sample[0].content)).schema
-    schema = _decode_schema(probe, with_filename)
+    partitions = tuple(p for p in partitions if p not in probe.names)
+    schema = _decode_schema(probe, with_filename, partitions)
     expect_norm = _normalized_arrow_schema(probe)
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -154,7 +189,7 @@ def read_arrow(
                         f"expected {expect_norm}, got {got_norm}"
                     )
                 table = rd.read_all()
-                for out in _normalize_batch(table, fname_raw, with_filename).to_batches():
+                for out in _normalize_batch(table, fname_raw, with_filename, partitions).to_batches():
                     yield out
 
     return files_df.mapInArrow(decode, schema)

@@ -39,9 +39,10 @@ from pyspark.sql import functions as F
 
 from kubernetes_logs_datalake_spark.functions.time_ns import ns_to_timestamp
 from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
-from kubernetes_logs_datalake_spark.session import S3A_KEYS, pyarrow_s3_options
+from kubernetes_logs_datalake_spark.session import pyarrow_s3_options
 from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
     _normalize_uri,
+    hive_dir_value,
     read_arrow,
     write_arrow_file,
     write_via_hidden_name,
@@ -50,31 +51,6 @@ from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
 # Parquet dictionary pages only where values repeat; time and message
 # are near-unique per row, where a dictionary only costs bytes.
 PARQUET_DICT_COLUMNS = ["stream", "logtag", "node", "pod", "container"]
-
-# Spark's escaping of hive partition values in directory names
-# (ExternalCatalogUtils.escapePathName), so partition discovery reads
-# back the exact value: '/' or ':' in a cluster name stays one level.
-_HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # null or empty value
-
-
-def _partition_dir_value(value) -> str:
-    if value is None or value == "":
-        return HIVE_DEFAULT_PARTITION
-    return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in str(value))
-
-
-def _partition_value_from_dir(name: F.Column) -> F.Column:
-    """Inverse of :func:`_partition_dir_value`, as Spark's partition
-    discovery decodes Parquet directories: ``+`` is literal, and a name
-    that is not valid escaping is taken as it is."""
-    decoded = F.try_url_decode(F.regexp_replace(name, r"\+", "%2B"))
-    return (
-        F.when(name == HIVE_DEFAULT_PARTITION, None)
-        .when(name.contains("%"), F.coalesce(decoded, name))  # decode only escaped names
-        .otherwise(name)
-    )
-
 
 def _write_parquet_file(table: pa.Table, dest: str, s3: dict | None = None) -> None:
     """One ZSTD Parquet file (level 3, parquet-mr's default) with a
@@ -93,8 +69,7 @@ def _s3_options(spark: SparkSession, root: str) -> dict | None:
     root (read on the driver; workers have no JVM), else ``None``."""
     if not _normalize_uri(root).startswith("s3://"):
         return None
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    return pyarrow_s3_options({k: hconf.get(k) for k in S3A_KEYS})
+    return pyarrow_s3_options(spark.sparkContext._jsc.hadoopConfiguration().get)
 
 
 def _ensure_date(df: DataFrame) -> DataFrame:
@@ -182,7 +157,7 @@ class LogLake:
         s3 = _s3_options(df.sparkSession, root)
 
         def write_group(key: tuple, table: pa.Table) -> pa.Table:
-            rel = "/".join(f"{c}={_partition_dir_value(v.as_py())}" for c, v in zip(parts, key))
+            rel = "/".join(f"{c}={hive_dir_value(v.as_py())}" for c, v in zip(parts, key))
             table = table.drop_columns(parts).sort_by("time_ns")
             arrow_cols = [c for c in table.column_names if c != "time"]
             for i, start in enumerate(range(0, table.num_rows, max_rows)):
@@ -223,16 +198,9 @@ class LogLake:
                 .parquet(self.root)
             )
         elif fmt == "arrow":
-            df = read_arrow(spark, self.root)
-            # Hive partition values live in the directory names; the
-            # arrow decode carries the file path in `_file` — recover
-            # cluster/namespace/date from it (Spark's parquet source
-            # does this natively; the IPC source mirrors it).
-            for part in NATIVE_PARTITIONING:
-                if part not in df.columns:
-                    df = df.withColumn(part, _partition_value_from_dir(
-                        F.regexp_extract(F.col("_file"), f"/{part}=([^/]+)/", 1)
-                    ))
+            # Hive partition values live in the directory names: the IPC
+            # source recovers them per file, as Spark's parquet source does.
+            df = read_arrow(spark, self.root, partitions=NATIVE_PARTITIONING)
         else:
             raise ValueError(f"unknown format {fmt!r}")
         df = _normalize_time(df)

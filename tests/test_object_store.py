@@ -66,16 +66,16 @@ def test_pyarrow_s3_options_follow_s3a_conf():
     addressing style and keys the S3A conf gives Spark's reads."""
     conf = s3a_conf(endpoint="http://localhost:30070/", access_key="ak", secret_key="sk")
     hadoop = {k.removeprefix("spark.hadoop."): v for k, v in conf.items()}
-    assert pyarrow_s3_options(hadoop) == {
+    assert pyarrow_s3_options(hadoop.get) == {
         "scheme": "http", "endpoint_override": "localhost:30070",
         "access_key": "ak", "secret_key": "sk",
     }
     # no scheme in the endpoint: the SSL flag decides; S3A's default
     # virtual-host addressing must be asked of pyarrow explicitly
     assert pyarrow_s3_options(
-        {"fs.s3a.endpoint": "minio:9000", "fs.s3a.connection.ssl.enabled": "false"}
+        {"fs.s3a.endpoint": "minio:9000", "fs.s3a.connection.ssl.enabled": "false"}.get
     ) == {"scheme": "http", "endpoint_override": "minio:9000", "force_virtual_addressing": True}
-    assert pyarrow_s3_options({"fs.s3a.access.key": "ak"}) == {}
+    assert pyarrow_s3_options({"fs.s3a.access.key": "ak"}.get) == {}
 
 
 def test_lake_writer_reads_s3a_settings_from_the_session(spark):
