@@ -66,7 +66,6 @@ class IngestJob:
     exclude_container: str | None = DEFAULT_EXCLUDE
     checkpoint: str | None = None
     _query: object = field(default=None, repr=False)
-    _stream: str | None = field(default=None, repr=False)
 
     # ------------------------------------------------------------ plan
 
@@ -92,7 +91,6 @@ class IngestJob:
     # ------------------------------------------------------------- run
 
     def start(self, spark: SparkSession):
-        self._stream = None  # re-read: a new checkpoint is a new query
         self._query = (
             self.records(spark)
             .writeStream.foreachBatch(self._write_epoch)
@@ -114,9 +112,8 @@ class IngestJob:
         tells apart the streams (one per node) that share a lake, whose
         epoch ids all count from 0 and whose node-local checkpoints may
         all have the same path."""
-        if self._stream is None:
-            self._stream = _checkpoint_query_id(batch_df.sparkSession, self._checkpoint())
-        LogLake(self.lake_root).write_formats(batch_df, self.formats, f"{epoch_id:05d}-{self._stream}")
+        stream = _checkpoint_query_id(batch_df.sparkSession, self._checkpoint())
+        LogLake(self.lake_root).write_formats(batch_df, self.formats, f"{epoch_id:05d}-{stream}")
 
     def process_available(self) -> None:
         """Drain everything currently discoverable (test/backfill aid)."""
