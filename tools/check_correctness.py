@@ -6,12 +6,30 @@ Runs every ``queries()`` entry at sf0.01 and compares against
 order-insensitive value hash (columns sorted by name, rows sorted,
 floats repr'd). Queries without oracle SQL get a rows-only check.
 
-Usage: python tools/check_correctness.py [name ...]
+``--record PATH`` also writes the per-query results as JSON in the
+``CORRECTNESS_rNN.json`` schema that ``tools/ledger.py`` folds, one row
+per query checked::
+
+    {"rows_match": .., "schema_match": .., "hash_match": ..,
+     "spark_rows": .., "oracle_rows": .., "err": .., "source": ..}
+
+``hash_match`` is true only when the whole check passed; a DECIMAL
+output-type failure records ``hash_match: false`` with the lint text
+in ``err``. Queries without oracle SQL are written as earlier rounds
+wrote them: match fields null, ``err: "no_oracle"``. A Spark or DuckDB
+error goes in ``err`` with the match fields null. ``source`` names this
+tool and the scale factor, so a local re-check can be told apart from
+earlier rounds' rows (the ledger ignores keys it does not read).
+
+Usage: python tools/check_correctness.py [--record PATH] [name ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import json
+import os
 import sys
 import time
 
@@ -23,6 +41,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from kubernetes_logs_datalake_spark import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+SOURCE = f"tools/check_correctness.py {os.path.basename(SF_DIR)}"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -54,8 +73,29 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
-def main() -> int:
-    only = set(sys.argv[1:])
+def record_row(spark_rows=None, oracle_rows=None, *, rows_match=None,
+               schema_match=None, hash_match=None, err=None) -> dict:
+    """One ``--record`` row, in the CORRECTNESS_rNN.json field order."""
+    return {
+        "rows_match": rows_match,
+        "schema_match": schema_match,
+        "hash_match": hash_match,
+        "spark_rows": spark_rows,
+        "oracle_rows": oracle_rows,
+        "err": err,
+        "source": SOURCE,
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Check queries() at sf0.01 against their DuckDB oracles."
+    )
+    ap.add_argument("names", nargs="*", help="only check these queries")
+    ap.add_argument("--record", metavar="PATH",
+                    help="write per-query results as CORRECTNESS_rNN.json")
+    args = ap.parse_args(argv)
+    only = set(args.names)
     known = set(entrymod.queries())
     unknown = only - known
     if unknown:
@@ -71,6 +111,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    record: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -80,11 +121,14 @@ def main() -> int:
             cols = sdf.columns
             rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
+            msg = f"spark error: {type(e).__name__}: {str(e)[:300]}"
+            print(f"FAIL  {name}: {msg}")
+            record[name] = record_row(err=msg)
             failures.append(name)
             continue
         if name not in oracles:
             print(f"rows  {name}: {len(rows)} rows (rows-only, {time.time()-t0:.1f}s)")
+            record[name] = record_row(len(rows), err="no_oracle")
             continue
         try:
             # fetch via Arrow — the closest public analog of whatever
@@ -96,7 +140,9 @@ def main() -> int:
                 tuple(d[c] for c in ocols) for d in otbl.to_pylist()
             ]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {str(e)[:300]}")
+            msg = f"duckdb error: {str(e)[:300]}"
+            print(f"FAIL  {name}: {msg}")
+            record[name] = record_row(len(rows), err=msg)
             failures.append(name)
             continue
         problems = []
@@ -116,9 +162,12 @@ def main() -> int:
                 problems.append(
                     f"spark col {f_name} is {f_type} — cast to double/long"
                 )
-        if sorted(cols) != sorted(ocols):
+        lint = "; ".join(problems) or None
+        schema_match = sorted(cols) == sorted(ocols)
+        rows_match = len(rows) == len(orows)
+        if not schema_match:
             problems.append(f"cols spark={sorted(cols)} duckdb={sorted(ocols)}")
-        if len(rows) != len(orows):
+        if not rows_match:
             problems.append(f"rowcount spark={len(rows)} duckdb={len(orows)}")
         if not problems:
             hs, ho = value_hash(cols, rows), value_hash(ocols, orows)
@@ -132,6 +181,10 @@ def main() -> int:
                         problems.append(f"  spark : {a[:160]}")
                         problems.append(f"  duckdb: {b[:160]}")
                         break
+        record[name] = record_row(
+            len(rows), len(orows), rows_match=rows_match,
+            schema_match=schema_match, hash_match=not problems, err=lint,
+        )
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems[:1]))
             for p in problems[1:]:
@@ -139,6 +192,10 @@ def main() -> int:
             failures.append(name)
         else:
             print(f"ok    {name}: {len(rows)} rows match ({time.time()-t0:.1f}s)")
+    if args.record:
+        with open(args.record, "w") as f:
+            json.dump(record, f, indent=2)
+        print(f"recorded {len(record)} rows to {args.record}")
     print()
     if failures:
         print(f"{len(failures)} FAILURES: {failures}")

@@ -5,6 +5,20 @@ should lead with — never-checked queries first, then the stalest green
 rows. This is the computation the `_R*_WINDOW` comment in
 `__spark_entry__.py` documents; run it when planning a round.
 
+A round is usually the driver's check of the current 50-query window.
+It may also be a full-registry local re-check, written by
+``python tools/check_correctness.py --record CORRECTNESS_rNN.json``
+(rows carry ``source: "tools/check_correctness.py sf0.01"``). That is
+the only way back from a skipped rotation: once a round lands without
+its planned rotation, the next round can face more breaching rows than
+the window holds. r16 re-ran the r15 window instead of rotating in
+plans["16"], so at r17 the 32 r11-vintage and 47 r12-vintage rows were
+all past the horizon. Guard 2 needs each of them in plans["17"] and
+guard 3 needs plans["17"] inside the window, i.e. 79 rows in 50 slots;
+relabelling a rotated window as the already-run r16 would pass the
+guards on a false round number. CORRECTNESS_r17.json is such a
+re-check of all registered queries.
+
 Usage: python tools/ledger.py [--stale N]   (N = how many stale rows to list)
 """
 
