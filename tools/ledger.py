@@ -5,7 +5,8 @@ should lead with — never-checked queries first, then the stalest green
 rows. This is the computation the `_R*_WINDOW` comment in
 `__spark_entry__.py` documents; run it when planning a round.
 
-A round is usually the driver's check of the current 50-query window.
+A round is usually the correctness gate's check of the current
+50-query window.
 It may also be a full-registry local re-check, written by
 ``python tools/check_correctness.py --record CORRECTNESS_rNN.json``
 (rows carry ``source: "tools/check_correctness.py sf0.01"``). That is
