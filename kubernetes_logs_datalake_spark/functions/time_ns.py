@@ -154,12 +154,17 @@ def parse_since(since: str) -> tuple[int, str]:
     return int(s[:-1]), _UNIT_NAMES[s[-1]]
 
 
+def since_cutoff(since: str, now: Column | None = None) -> Column:
+    """``now() - INTERVAL since`` as a ``timestamp_ntz``."""
+    n, unit = parse_since(since)
+    anchor = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
+    return anchor - F.expr(f"INTERVAL {n} {unit}")
+
+
 def since_cutoff_predicate(time_col: Column | str, since: str, now: Column | None = None) -> Column:
     """``time >= now() - INTERVAL since`` (reference ``y-logcli:160-171``).
 
     A plain comparison against a literal-ish cutoff → pushed down to
     parquet row-group stats by Catalyst.
     """
-    n, unit = parse_since(since)
-    anchor = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
-    return _col(time_col) >= anchor - F.expr(f"INTERVAL {n} {unit}")
+    return _col(time_col) >= since_cutoff(since, now)

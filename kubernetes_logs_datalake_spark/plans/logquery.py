@@ -6,7 +6,8 @@ DataFrame API so Catalyst performs what the CLI does manually:
 
 - selector → partition pruning (native hive layout) or glob pruning
   (positional layout), reference ``y-logcli:104-123``;
-- ``--since`` → a pushed-down timestamp predicate, ``y-logcli:160-171``;
+- ``--since`` → a pushed-down timestamp predicate, ``y-logcli:160-171``,
+  and on the native layout a ``date`` partition predicate;
 - ``-f both`` → ``unionByName`` of the parquet and arrow scans,
   ``y-logcli:243-255`` (Spark needs no select-list gymnastics: by-name
   union + a sort on a post-projection column is legal);
@@ -22,10 +23,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kubernetes_logs_datalake_spark.functions.time_ns import (
-    fmt_ns_iso,
-    since_cutoff_predicate,
-)
+from kubernetes_logs_datalake_spark.functions.time_ns import fmt_ns_iso
+from kubernetes_logs_datalake_spark.session import shuffle_partitions
 from kubernetes_logs_datalake_spark.sources.logs import LogLake
 
 FULL_COLUMNS = [
@@ -41,22 +40,6 @@ FULL_COLUMNS = [
 ]
 OUTPUT_MODES = ("table", "raw", "lines", "columns")
 FORMATS = ("parquet", "arrow", "both")
-
-# error signatures that mean "this format simply has no files here" —
-# anything else propagating out of a scan is a real failure
-_MISSING_FORMAT_SIGNATURES = (
-    "PATH_NOT_FOUND",
-    "UNABLE_TO_INFER_SCHEMA",
-    "Path does not exist",
-    "no .arrow files match",
-)
-
-
-def _is_missing_format_error(e: Exception) -> bool:
-    if isinstance(e, FileNotFoundError):
-        return True
-    msg = str(e)
-    return any(sig in msg for sig in _MISSING_FORMAT_SIGNATURES)
 
 
 @dataclass
@@ -79,11 +62,18 @@ class LogQuery:
     # ------------------------------------------------------------ plan
 
     def _scan(self, spark: SparkSession, fmt: str) -> DataFrame:
-        df = self.lake.read(spark, fmt=fmt, selectors=self.selectors, cluster=self.cluster)
-        if self.since:
-            df = df.filter(since_cutoff_predicate("time", self.since))
+        df = self.lake.read(
+            spark, fmt=fmt, selectors=self.selectors, cluster=self.cluster, since=self.since
+        )
         cols = [c if c in df.columns else F.lit(None).cast("string").alias(c) for c in FULL_COLUMNS]
-        return df.select("time_ns", *cols)
+        df = df.select("time_ns", *cols)
+        if fmt == "arrow":
+            # The global sort samples its input in a job of its own to
+            # pick range bounds. Straight over mapInArrow, that job would
+            # run the Python decode of every file a second time; behind
+            # a shuffle it reads the shuffle's output instead.
+            df = df.repartition(shuffle_partitions(spark))
+        return df
 
     def df(self, spark: SparkSession) -> DataFrame:
         """Full-column result, globally ordered by event time (ns-exact).
@@ -102,12 +92,11 @@ class LogQuery:
             for fmt in ("arrow", "parquet"):
                 try:
                     scans.append(self._scan(spark, fmt))
-                except Exception as e:
-                    # ONLY a genuinely absent format side may be skipped;
-                    # corrupt files / auth failures must surface, never
-                    # silently shrink results to one format
-                    if not _is_missing_format_error(e):
-                        raise
+                except FileNotFoundError as e:
+                    # ONLY a format whose listing holds no file of its
+                    # extension may be skipped; corrupt files / auth
+                    # failures must surface, never silently shrink
+                    # results to one format
                     warnings.warn(
                         f"lake has no {fmt} side; querying the rest ({e})",
                         stacklevel=2,

@@ -48,6 +48,14 @@ LOG_SCHEMA = T.StructType(LOG_FIELDS + DIM_FIELDS)
 # parquet row-group stats + dictionary filters instead.
 NATIVE_PARTITIONING = ["cluster", "namespace", "date"]
 
+# The native lake as Spark reads it: the stored columns, then the
+# partition columns as strings (Spark would type an all-digit namespace
+# as a number, and `date` as a date).
+NATIVE_LAKE_SCHEMA = T.StructType(
+    [f for f in LOG_SCHEMA.fields if f.name not in NATIVE_PARTITIONING]
+    + [T.StructField(c, T.StringType(), True) for c in NATIVE_PARTITIONING]
+)
+
 # The reference's positional S3 key layout:
 # /<cluster>/<namespace>/YYYY/MM/DD/<node>/<pod>/<container>/HH/MM/<uuid>.<ext>
 # 0-indexed positions *after* the lake-root prefix is stripped:

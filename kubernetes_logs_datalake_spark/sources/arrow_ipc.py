@@ -22,16 +22,18 @@ from __future__ import annotations
 
 import contextlib
 import posixpath
-import re
 import uuid
 from collections.abc import Callable, Iterator
+from urllib.parse import quote, unquote
 
 import pyarrow as pa
 import pyarrow.feather as feather
 import pyarrow.ipc as ipc
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from kubernetes_logs_datalake_spark.session import pyarrow_s3_options
 
 DICT_COLUMNS = ("stream", "logtag")
 
@@ -49,16 +51,15 @@ def hive_dir_value(value) -> str:
     return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in str(value))
 
 
-def hive_value_from_dir(name: str) -> str | None:
-    """Inverse of :func:`hive_dir_value`, as Spark's partition discovery
-    decodes Parquet directories (``unescapePathName``): each ``%XX`` is
-    one character, anything else (``+``, a stray ``%``) is literal."""
-    if name == HIVE_DEFAULT_PARTITION:
-        return None
-    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
-
-
 # ---------------------------------------------------------------------- read
+
+# binaryFile's own columns; a user schema adds hive partition columns
+_BINARY_FILE_FIELDS = [
+    T.StructField("path", T.StringType(), False),
+    T.StructField("modificationTime", T.TimestampType(), False),
+    T.StructField("length", T.LongType(), False),
+    T.StructField("content", T.BinaryType(), True),
+]
 
 
 def _normalized_arrow_schema(schema: pa.Schema) -> pa.Schema:
@@ -75,9 +76,9 @@ def _normalized_arrow_schema(schema: pa.Schema) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _decode_schema(schema: pa.Schema, with_filename: bool, partitions: tuple[str, ...] = ()) -> T.StructType:
+def _decode_schema(schema: pa.Schema, extra: list[str]) -> T.StructType:
     """Spark schema for an IPC file schema (ns timestamps → long), then
-    the string ``partitions`` and ``_file``."""
+    the string columns ``extra`` (partition values, ``_file``)."""
     fields = []
     for f in schema:
         typ = f.type
@@ -88,9 +89,7 @@ def _decode_schema(schema: pa.Schema, with_filename: bool, partitions: tuple[str
         else:
             spark_t = T.StructType.fromDDL(f"x {_arrow_to_ddl(typ)}")[0].dataType
         fields.append(T.StructField(f.name, spark_t, True))
-    fields += [T.StructField(p, T.StringType(), True) for p in partitions]
-    if with_filename:
-        fields.append(T.StructField("_file", T.StringType(), False))
+    fields += [T.StructField(c, T.StringType(), True) for c in extra]
     return T.StructType(fields)
 
 
@@ -114,10 +113,10 @@ def _arrow_to_ddl(typ: pa.DataType) -> str:
     raise TypeError(f"unsupported arrow type in IPC source: {typ}")
 
 
-def _normalize_batch(table: pa.Table, fname: str, with_filename: bool, partitions: tuple[str, ...] = ()) -> pa.Table:
-    """Dictionary→plain decode; ns-timestamp→int64; the file's hive
-    ``partitions`` values (one per file, from its directory names);
-    optional filename."""
+def _normalize_batch(table: pa.Table, constants: dict[str, str | None]) -> pa.Table:
+    """Dictionary→plain decode; ns-timestamp→int64; then one string
+    column per ``constants`` entry (the file's partition values and
+    name), the same value on every row."""
     cols = []
     for name in table.column_names:
         col = table.column(name)
@@ -127,19 +126,48 @@ def _normalize_batch(table: pa.Table, fname: str, with_filename: bool, partition
             col = col.cast(pa.int64())
         cols.append(col)
     out = pa.table(dict(zip(table.column_names, cols)))
-    dirs = dict(d.split("=", 1) for d in fname.split("/")[:-1] if "=" in d)  # deepest wins
-    for part in partitions:
-        value = hive_value_from_dir(dirs[part]) if part in dirs else None
-        out = out.append_column(part, pa.array([value] * len(out), pa.string()))
-    if with_filename:
-        out = out.append_column("_file", pa.array([fname] * len(out), pa.string()))
+    for name, value in constants.items():
+        out = out.append_column(name, pa.array([value] * len(out), pa.string()))
     return out
 
 
+def _s3_options(spark: SparkSession, root: str) -> dict | None:
+    """The session's S3A settings as pyarrow S3 options for an object-store
+    root (read on the driver; workers have no JVM), else ``None``."""
+    if not _normalize_uri(root).startswith("s3://"):
+        return None
+    return pyarrow_s3_options(spark.sparkContext._jsc.hadoopConfiguration().get)
+
+
+def glob_matches(spark: SparkSession, pattern: str) -> bool:
+    """Whether a Hadoop glob matches any path. Spark's own ``load`` of
+    an empty glob fails with an analysis error; this asks first."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(pattern)
+    found = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).globStatus(path)
+    return bool(found)
+
+
+def _footer_schema(uri: str, s3: dict | None) -> pa.Schema:
+    """The IPC schema in one listed file's footer, read on the driver
+    through ``pyarrow.fs`` (a footer read, no Spark job).
+    ``inputFiles()`` lists percent-encoded URIs (a hive-escaped ``%3A``
+    is listed as ``%253A``), so the URI is decoded to the name first."""
+    filesystem, path = _resolve_fs(unquote(uri), s3)
+    with filesystem.open_input_file(path) as f:
+        try:
+            return ipc.open_file(f).schema
+        except pa.ArrowInvalid as exc:
+            raise ValueError(f"{uri} is not an Arrow IPC file: {exc}") from exc
+
+
 def read_arrow(
-    spark: SparkSession, path_glob: str, with_filename: bool = True, partitions: tuple[str, ...] = ()
+    spark: SparkSession,
+    path_glob: str,
+    with_filename: bool = True,
+    partitions: tuple[str, ...] = (),
+    where: Column | None = None,
 ) -> DataFrame:
-    """Read Arrow IPC files matching a glob as a DataFrame.
+    """Read Arrow IPC files as a DataFrame.
 
     The Spark analog of DuckDB's ``read_arrow(glob, filename=true)``
     (reference ``y-logcli:210-213``). File bytes travel through
@@ -149,50 +177,59 @@ def read_arrow(
     (``s3a://``, ``abfs://``, local), matching the reference's S3-glob
     reads. Decode scales with the number of files, not driver memory;
     the ingest layer bounds file sizes (~1 MB-class micro-batches).
-    ``partitions`` names hive partition columns (``<column>=<value>``
-    directories) that the files do not hold; each is recovered once per
-    file from its path, as Spark's Parquet source does.
+
+    ``path_glob`` is a glob or a directory, read recursively (Hadoop globs
+    have no ``**``). With ``partitions`` it is instead the root of a
+    hive-partitioned lake: ``binaryFile`` discovers the
+    ``<column>=<value>`` directories as string columns, and ``where``, a
+    predicate on them, filters the file listing before any file is read
+    (``PartitionFilters``), as Spark's Parquet source prunes. The schema
+    is the IPC footer of one listed file, read on the driver; each file
+    is checked against it as it decodes. A listing with no ``.arrow``
+    file raises :class:`FileNotFoundError`.
     """
     reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.arrow")
-    if any(ch in path_glob for ch in "*?["):
-        files_df = reader.load(path_glob).select("path", "content")
-    else:  # plain directory → recurse (Hadoop globs have no `**`)
-        files_df = (
-            reader.option("recursiveFileLookup", "true")
-            .load(path_glob)
-            .select("path", "content")
-        )
-    # driver-side schema probe: one file's bytes (micro-batch-sized)
-    sample = files_df.limit(1).collect()
-    if not sample:
-        raise FileNotFoundError(f"no .arrow files match {path_glob}")
-    probe = ipc.open_file(pa.BufferReader(sample[0].content)).schema
-    partitions = tuple(p for p in partitions if p not in probe.names)
-    schema = _decode_schema(probe, with_filename, partitions)
-    expect_norm = _normalized_arrow_schema(probe)
+    if partitions:
+        fields = _BINARY_FILE_FIELDS + [T.StructField(p, T.StringType(), True) for p in partitions]
+        files = reader.schema(T.StructType(fields)).option("basePath", path_glob).load(path_glob)
+    elif any(ch in path_glob for ch in "*?["):
+        if not glob_matches(spark, path_glob):
+            raise FileNotFoundError(f"no .arrow files match {path_glob}")
+        files = reader.load(path_glob)
+    else:
+        files = reader.option("recursiveFileLookup", "true").load(path_glob)
+    listed = files.inputFiles()
+    if not listed:
+        raise FileNotFoundError(f"no .arrow files under {path_glob}")
+    expect = _footer_schema(listed[0], _s3_options(spark, path_glob))
+    if where is not None:
+        files = files.filter(where)
+    extra = [*partitions, "_file"] if with_filename else list(partitions)
+    schema = _decode_schema(expect, extra)
+    expect_norm = _normalized_arrow_schema(expect)
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             paths = batch.column("path").to_pylist()
             contents = batch.column("content").to_pylist()
-            for fname_raw, buf in zip(paths, contents):
+            values = [batch.column(p).to_pylist() for p in partitions]
+            for i, (fname, buf) in enumerate(zip(paths, contents)):
                 try:
                     rd = ipc.open_file(pa.BufferReader(buf))
                 except pa.ArrowInvalid as exc:
-                    raise ValueError(
-                        f"{fname_raw} is not an Arrow IPC file: {exc}"
-                    ) from exc
+                    raise ValueError(f"{fname} is not an Arrow IPC file: {exc}") from exc
                 got_norm = _normalized_arrow_schema(rd.schema)
                 if got_norm != expect_norm:
                     raise ValueError(
-                        f"heterogeneous Arrow IPC schema in {fname_raw}: "
+                        f"heterogeneous Arrow IPC schema in {fname}: "
                         f"expected {expect_norm}, got {got_norm}"
                     )
-                table = rd.read_all()
-                for out in _normalize_batch(table, fname_raw, with_filename, partitions).to_batches():
-                    yield out
+                constants = {p: v[i] for p, v in zip(partitions, values)}
+                if with_filename:
+                    constants["_file"] = fname
+                yield from _normalize_batch(rd.read_all(), constants).to_batches()
 
-    return files_df.mapInArrow(decode, schema)
+    return files.select("path", "content", *partitions).mapInArrow(decode, schema)
 
 
 # --------------------------------------------------------------------- write
@@ -207,20 +244,27 @@ def _resolve_fs(dest: str, s3: dict | None = None):
     ``s3n://`` (the Hadoop S3 connector schemes the reference's lake
     uses, ``fluent-bit.conf:32-45``) map onto pyarrow's S3FileSystem;
     ``file://`` and scheme-less paths resolve to the local filesystem.
+    The path is taken as written, never percent-decoded, so a
+    hive-escaped directory name keeps its ``%XX``.
     ``s3`` carries the session's S3A settings as S3FileSystem arguments
     (:func:`kubernetes_logs_datalake_spark.session.pyarrow_s3_options`),
     so writes reach the same endpoint the Hadoop reads do.
     This is the write-side mirror of the reader's ``binaryFile`` +
-    ``BufferReader`` object-store path.
+    ``BufferReader`` object-store path; the reader's driver-side footer
+    read resolves through it too.
     """
     from pyarrow import fs as pafs
 
-    uri = _normalize_uri(dest)
-    if "://" not in uri:
-        return pafs.LocalFileSystem(), uri
-    if s3 is not None and uri.startswith("s3://"):
-        return pafs.S3FileSystem(**s3), uri.split("://", 1)[1]
-    return _fs_from_uri(uri)
+    scheme, sep, rest = _normalize_uri(dest).partition("://")
+    if not sep:
+        return pafs.LocalFileSystem(), dest
+    if scheme == "file":
+        return pafs.LocalFileSystem(), rest
+    if s3 is not None and scheme == "s3":
+        return pafs.S3FileSystem(**s3), rest
+    # from_uri percent-decodes the path: quote it, so a hive-escaped
+    # ``%3A`` in a directory name stays three characters
+    return _fs_from_uri(f"{scheme}://{quote(rest)}")
 
 
 def _fs_from_uri(uri: str):

@@ -31,17 +31,22 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kubernetes_logs_datalake_spark.functions.time_ns import ns_to_timestamp
-from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
-from kubernetes_logs_datalake_spark.session import pyarrow_s3_options
+from kubernetes_logs_datalake_spark.functions.time_ns import (
+    ns_to_timestamp,
+    since_cutoff,
+    since_cutoff_predicate,
+)
+from kubernetes_logs_datalake_spark.schema import NATIVE_LAKE_SCHEMA, NATIVE_PARTITIONING
 from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
-    _normalize_uri,
+    _s3_options,
+    glob_matches,
     hive_dir_value,
     read_arrow,
     write_arrow_file,
@@ -62,14 +67,6 @@ def _write_parquet_file(table: pa.Table, dest: str, s3: dict | None = None) -> N
         use_dictionary=[c for c in PARQUET_DICT_COLUMNS if c in table.column_names],
         column_encoding=delta,
     ), s3)
-
-
-def _s3_options(spark: SparkSession, root: str) -> dict | None:
-    """The session's S3A settings as pyarrow S3 options for an object-store
-    root (read on the driver; workers have no JVM), else ``None``."""
-    if not _normalize_uri(root).startswith("s3://"):
-        return None
-    return pyarrow_s3_options(spark.sparkContext._jsc.hadoopConfiguration().get)
 
 
 def _ensure_date(df: DataFrame) -> DataFrame:
@@ -179,38 +176,59 @@ class LogLake:
         fmt: str = "parquet",
         selectors: dict[str, str] | None = None,
         cluster: str | None = None,
+        since: str | None = None,
     ) -> DataFrame:
         """Scan the lake, pushing identity selectors into partition
-        pruning (native) or glob construction (positional)."""
+        pruning (native) or glob construction (positional), and keep the
+        records of the last ``since`` (``10m``, ``1h``, ...). A format
+        with no file in the listing raises :class:`FileNotFoundError`."""
         if self.layout == "native":
-            return self._read_native(spark, fmt, selectors or {}, cluster)
-        return self._read_positional(spark, fmt, selectors or {}, cluster)
+            df = self._read_native(spark, fmt, selectors or {}, cluster, since)
+        else:
+            df = self._read_positional(spark, fmt, selectors or {}, cluster)
+        if since:
+            df = df.filter(since_cutoff_predicate("time", since))
+        return df
 
     def _read_native(
-        self, spark: SparkSession, fmt: str, selectors: dict[str, str], cluster: str | None
+        self, spark: SparkSession, fmt: str, selectors: dict[str, str], cluster: str | None, since: str | None
     ) -> DataFrame:
+        # Partition predicates prune directories before any file is read:
+        # cluster/namespace equality, and the date bound `since` implies
+        # (a date directory holds the UTC date of `time`, so it is exact).
+        equal = [("cluster", cluster)] if cluster else []
+        equal += selectors.items()
+        pruning = [F.col(k) == v for k, v in equal if k in NATIVE_PARTITIONING]
+        if since:
+            pruning.append(F.col("date") >= F.date_format(since_cutoff(since), "yyyy-MM-dd"))
+        where = reduce(lambda a, b: a & b, pruning) if pruning else None
         if fmt == "parquet":
             # pathGlobFilter: the lake may hold both formats side by side
             # (the reference writes every batch twice, fluent-bit.conf:32-67).
+            # The fixed schema spares a footer-inference job and keeps the
+            # partition columns strings, as in the Arrow side.
             df = (
-                spark.read.option("basePath", self.root)
+                spark.read.schema(NATIVE_LAKE_SCHEMA)
+                .option("basePath", self.root)
                 .option("pathGlobFilter", "*.parquet")
                 .parquet(self.root)
             )
+            if not df.inputFiles():
+                raise FileNotFoundError(f"no .parquet files under {self.root}")
+            if where is not None:
+                df = df.filter(where)
         elif fmt == "arrow":
-            # Hive partition values live in the directory names: the IPC
-            # source recovers them per file, as Spark's parquet source does.
-            df = read_arrow(spark, self.root, partitions=NATIVE_PARTITIONING)
+            df = read_arrow(
+                spark, self.root, with_filename=False, partitions=tuple(NATIVE_PARTITIONING), where=where
+            )
         else:
             raise ValueError(f"unknown format {fmt!r}")
         df = _normalize_time(df)
-        # Plain equality filters: on native layout cluster/namespace/date
-        # are partition columns, so Catalyst prunes directories; the rest
-        # (pod/container) prune via parquet row-group dictionary/stats.
-        if cluster:
-            df = df.filter(F.col("cluster") == cluster)
-        for k, v in selectors.items():
-            df = df.filter(F.col(k) == v)
+        # the rest (pod/container/node) prune via parquet row-group
+        # dictionary/stats; on the Arrow side they filter decoded rows
+        for k, v in equal:
+            if k not in NATIVE_PARTITIONING:
+                df = df.filter(F.col(k) == v)
         return df
 
     def read_stream(self, spark: SparkSession) -> DataFrame:
@@ -221,9 +239,8 @@ class LogLake:
         recovered from the directory layout."""
         if self.layout != "native":
             raise ValueError("read_stream supports the native layout only")
-        static = self._read_native(spark, "parquet", {}, None)
         return (
-            spark.readStream.schema(static.schema)
+            spark.readStream.schema(NATIVE_LAKE_SCHEMA)
             .option("basePath", self.root)
             .option("pathGlobFilter", "*.parquet")
             .option("maxFilesPerTrigger", "1000")
@@ -274,6 +291,8 @@ class LogLake:
         ext = "arrow" if fmt == "arrow" else "parquet"
         glob = self.positional_glob(selectors, cluster, ext)
         if fmt == "parquet":
+            if not glob_matches(spark, glob):
+                raise FileNotFoundError(f"no .parquet files match {glob}")
             df = spark.read.parquet(glob)
         elif fmt == "arrow":
             df = read_arrow(spark, glob)

@@ -136,6 +136,8 @@ def test_resolve_fs_schemes(monkeypatch):
     it runs — and passes — even in pyarrow builds without the S3
     filesystem compiled in (this sandbox); constructing a real
     S3FileSystem is upstream behavior, not this repo's logic."""
+    from urllib.parse import unquote
+
     from pyarrow import fs as pafs
 
     from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
@@ -147,6 +149,9 @@ def test_resolve_fs_schemes(monkeypatch):
     assert isinstance(f, pafs.LocalFileSystem) and p == "/plain/local/path.arrow"
     f, p = _resolve_fs("file:///tmp/x/y.arrow")
     assert isinstance(f, pafs.LocalFileSystem) and p == "/tmp/x/y.arrow"
+    # a hive-escaped directory name is a name, not a percent-encoding
+    f, p = _resolve_fs("file:///tmp/cluster=a%3Ab/y.arrow")
+    assert isinstance(f, pafs.LocalFileSystem) and p == "/tmp/cluster=a%3Ab/y.arrow"
 
     assert _normalize_uri("s3a://bucket/k/v.arrow") == "s3://bucket/k/v.arrow"
     assert _normalize_uri("s3n://b/k") == "s3://b/k"
@@ -164,6 +169,8 @@ def test_resolve_fs_schemes(monkeypatch):
     f, p = _resolve_fs("s3a://bucket/k/v.arrow")
     assert seen["uri"] == "s3://bucket/k/v.arrow"
     assert f == "S3STUB" and p == "bucket/k/v.arrow"
+    _resolve_fs("gs://bucket/cluster=a%3Ab/v.arrow")  # from_uri decodes once
+    assert unquote(seen["uri"]) == "gs://bucket/cluster=a%3Ab/v.arrow"
 
 
 def test_resolve_fs_builds_s3_from_session_options(monkeypatch):

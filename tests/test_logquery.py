@@ -166,6 +166,11 @@ def test_positional_parquet_reference_file(spark, tmp_path):
     row = lk.read(spark, fmt="parquet", selectors={"pod": "pod-x"}, cluster="dev").first()
     assert row.time_ns == 1705314645123456789
     assert (row.namespace, row.node, row.container) == ("qa", "n1", "app")
+    # no .arrow file matches the glob: -f both reads the Parquet side
+    q = LogQuery(lk, cluster="dev", selectors={"pod": "pod-x"}, fmt="both", output="raw")
+    with pytest.warns(UserWarning, match="no arrow side"):
+        df = q.projected(spark)
+    assert [r.message for r in df.collect()] == ["pq ref"]
 
 
 def test_rolled_files_have_disjoint_time_ranges(spark, tmp_path):
@@ -223,3 +228,133 @@ def test_rolled_files_have_disjoint_time_ranges(spark, tmp_path):
         spans.sort()
         assert len(spans) == 3, (ext, spans)
         assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), (ext, spans)
+
+
+def _executed_nodes(df):
+    """Every node of ``df``'s executed plan (after it ran), through
+    adaptive query stages."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        else:
+            out.append(p)
+            kids = p.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _metric(node, name: str) -> int:
+    m = node.metrics().get(name)
+    return int(m.get().value()) if m.isDefined() else 0
+
+
+def _scans(df, fmt: str) -> list:
+    """The file scans of one format in ``df``'s executed plan."""
+    fmt_name = {"arrow": "binaryfile", "parquet": "parquet"}[fmt]
+    return [
+        n for n in _executed_nodes(df)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and fmt_name in n.relation().fileFormat().toString().lower()
+    ]
+
+
+def _write_lines(spark, lake, lines, cluster, formats=("parquet", "arrow")):
+    raw = spark.createDataFrame(lines, ["path", "value"])
+    records = parse_cri_lines(raw, path_col="path", cluster=cluster, node="n1")
+    for fmt in formats:
+        lake.write_batch(records, fmt=fmt)
+
+
+@pytest.fixture(scope="module")
+def four_ns_arrow_lake(spark, tmp_path_factory):
+    """Four namespaces of 50 records each, one Arrow file per namespace."""
+    lk = LogLake(str(tmp_path_factory.mktemp("four_ns")))
+    lines = [
+        (f"/var/log/pods/ns{n}_app-1_uid/app/0.log", f"2024-01-15T10:30:{i:02d}.{n:09d}Z stdout F m{n}-{i}")
+        for n in range(1, 5) for i in range(50)
+    ]
+    _write_lines(spark, lk, lines, "dev", formats=("arrow",))
+    return lk
+
+
+def test_arrow_query_decodes_only_selected_files_once(spark, four_ns_arrow_lake):
+    """A one-namespace Arrow query lists 1 of 4 files and decodes its 50
+    records once: partition filters prune before decode, and the sort's
+    range sampling reads shuffle output instead of re-running Python."""
+    q = LogQuery(four_ns_arrow_lake, cluster="dev", selectors={"namespace": "ns1"}, fmt="arrow")
+    df = q.df(spark)
+    rows = df.collect()
+    assert len(rows) == 50 and [r.time_ns for r in rows] == sorted(r.time_ns for r in rows)
+    decodes = [n for n in _executed_nodes(df) if n.getClass().getSimpleName() == "MapInArrowExec"]
+    assert sum(_metric(n, "pythonNumRowsReceived") for n in decodes) == 50
+    assert sum(_metric(n, "numFiles") for n in _scans(df, "arrow")) == 1
+
+
+def test_arrow_scan_partition_pruning(spark, four_ns_arrow_lake):
+    """Selector equality on cluster/namespace is a partition filter of
+    the Arrow file scan, as on the Parquet side."""
+    q = LogQuery(four_ns_arrow_lake, cluster="dev", selectors={"namespace": "ns1"}, fmt="arrow")
+    plan = q.df(spark)._jdf.queryExecution().executedPlan().toString()
+    scan = next(line for line in plan.splitlines() if "binaryFile" in line and "PartitionFilters" in line)
+    pf = scan.split("PartitionFilters:")[1].split("]")[0]
+    assert "namespace" in pf and "cluster" in pf
+
+
+def test_partition_columns_are_strings_in_both_formats(spark, tmp_path):
+    """All-digit partition values read back as written: cluster 123 and
+    namespace 007 render as 123/007 from either format and from both."""
+    lk = LogLake(str(tmp_path / "digits"))
+    lines = [("/var/log/pods/007_app-1_uid/app/0.log", "2024-01-15T10:30:45.123456789Z stdout F d")]
+    _write_lines(spark, lk, lines, "123")
+    for fmt, n in (("parquet", 1), ("arrow", 1), ("both", 2)):
+        q = LogQuery(lk, cluster="123", selectors={"namespace": "007"}, fmt=fmt, output="lines")
+        out = list(render(q.projected(spark), "lines"))
+        assert [x.strip() for x in out if x.strip().startswith(("cluster =", "namespace ="))] == [
+            "cluster = 123", "namespace = 007",
+        ] * n, (fmt, out)
+
+
+def test_since_prunes_older_date_directories(spark, tmp_path):
+    """--since bounds the date partition: a 1h query lists no file of an
+    older date directory in either format, and keeps the recent rows."""
+    import datetime as dt
+
+    lk = LogLake(str(tmp_path / "dated"))
+    recent = dt.datetime.now(dt.timezone.utc) - dt.timedelta(minutes=10)
+    lines = [
+        ("/var/log/pods/qa_app-1_uid/app/0.log", "2024-01-15T10:30:45.123456789Z stdout F old"),
+        ("/var/log/pods/qa_app-1_uid/app/0.log", recent.strftime("%Y-%m-%dT%H:%M:%S.%f000Z") + " stdout F new"),
+    ]
+    _write_lines(spark, lk, lines, "dev")
+    for fmt in ("parquet", "arrow"):
+        df = LogQuery(lk, cluster="dev", since="1h", fmt=fmt).df(spark)
+        assert [r.message for r in df.collect()] == ["new"], fmt
+        (scan,) = _scans(df, fmt)
+        assert "date" in scan.toString().split("PartitionFilters:")[1].split("]")[0], fmt
+        assert _metric(scan, "numFiles") == 1, fmt
+
+
+def test_both_formats_raises_on_corrupt_arrow_file(spark, tmp_path):
+    """A corrupt .arrow file is a failure, not an absent format: -f both
+    raises instead of warning and querying Parquet alone."""
+    import glob as globmod
+    import os
+    import warnings
+
+    lk = LogLake(str(tmp_path / "corrupt"))
+    lines = [("/var/log/pods/qa_app-1_uid/app/0.log", "2024-01-15T10:30:45.123456789Z stdout F x")]
+    _write_lines(spark, lk, lines, "dev")
+    (good,) = globmod.glob(f"{lk.root}/**/*.arrow", recursive=True)
+    with open(os.path.join(os.path.dirname(good), "junk.arrow"), "wb") as f:
+        f.write(b"not an arrow file")
+    q = LogQuery(lk, cluster="dev", fmt="both", output="raw")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        with pytest.raises(Exception, match="not an Arrow IPC file"):
+            q.projected(spark).collect()
+    assert not [w for w in seen if "no arrow side" in str(w.message)]

@@ -35,7 +35,11 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, wherever it was cloned
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers inherit the environment, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from kubernetes_logs_datalake_spark import get_spark  # noqa: E402

@@ -27,9 +27,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, wherever it was cloned
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: the freshness invariant the verdicts audit: every query's newest
 #: green driver row must be at most this many rounds old. Enforced at
