@@ -1,131 +1,263 @@
-"""Executing small-file compactor: plan → claim → rewrite bins → swap.
+"""The one lake rewriter: small-file compaction, and the claim protocol
+under which every rewrite of lake files is published (compaction here,
+key-based upsert in ``sources.maintenance.merge_upsert``).
 
-The planner (``sources.metadata.compaction_plan``) bins a file LISTING;
-this module executes the rewrite the plan describes, with the
-at-least-once discipline of SURVEY §7.5 (crash anywhere, re-run, and
-the lake converges to the same state — the same contract the streaming
-sink keeps):
+:func:`compact_lake` is the OPTIMIZE-style answer to the micro-batch
+files the reference accepts (``fluent-bit.conf:42-43``). It rewrites
+each partition directory's ingest files (``part-<hex>…`` names), each
+format on its own, Arrow IPC included, in bins of about ``_BIN_BYTES``
+source bytes. One Python task reads a bin, decodes its dictionaries and
+writes it through the ingest writer's :func:`~.logs.write_slices`, so
+compacted files keep the ingest shape: sorted by ``time_ns``, ZSTD,
+DELTA time, int8 dictionaries. A bin's targets are named
+``part-compact-<key>-<slice>``, where ``key`` hashes the bin's sorted
+sources; no ingest name looks like that, and compacted files are never
+compaction sources again.
 
-* The target file name is a **pure function of the bin's source file
-  list** (sha256 over the sorted source paths), so every re-run of the
-  same plan derives the same target — replay never forks.
-* Before any source file is deleted, the bin's membership is pinned by
-  a **sidecar manifest** (``.compact-<hash>.sources`` — hidden, so no
-  reader sees it): the sorted source list plus the published target's
-  expected byte length. Planning EXCLUDES claimed files, so a crash in
-  the middle of the source-delete loop can never shift the survivors
-  into a fresh bin and rewrite rows that already live in the published
-  target (the r8 replay-duplication hole: exclusive-cumsum bins are
-  only deterministic while the listing is). Replay of a found manifest
-  finishes exactly the claimed bin: republish if the target is absent
-  or torn (length ≠ expected), then delete surviving sources, then
-  retire the manifest.
-* Per bin, the rewrite is a tiny state machine replayed idempotently:
-    target absent,  sources present → stage, claim, publish, delete
-    target present, sources present → crashed between publish and
-                                      delete → claim, delete sources
-    target present, sources absent  → bin already done → no-op
-* The staged write goes to a ``_compact-…`` name in the SAME directory:
-  Hadoop/Spark readers ignore ``_``/``.``-prefixed files, so a
-  half-written stage is invisible. Publish is pluggable:
-    - ``publish_mode="rename"`` — one ``FileSystem.rename`` (atomic on
-      a real filesystem / HDFS).
-    - ``publish_mode="copy"`` — object-store semantics (S3 has no
-      rename): ``FileUtil.copy`` stage→target, verify the target's
-      length against the manifest, then delete the stage. A torn
-      target (crash mid-copy on a store without atomic PUT) fails the
-      length check on replay and is re-published from the stage or
-      re-staged from the still-present sources.
-  Worst case in either mode, a reader between publish and source-delete
-  sees a bin twice, never torn and never missing — at-least-once, like
-  the ingest sink; a table format's commit log is what upgrades that to
-  exactly-once (see sources/delta_lake.py for the contract).
+Claim protocol, per partition directory and rewrite:
 
-Bins are metadata rows: the driver iterates the PLAN (thousands of
-rows at 100 TB, not bytes of data) and each bin's rewrite is one
-distributed read→write job; independent bins are embarrassingly
-parallel, so at scale you run the loop with a thread pool submitting
-concurrent Spark jobs (``max_parallel_bins``) — the default of 4 keeps
-a local[32] test box busy without job-queue thrash.
+1. **claim**: a hidden manifest ``.compact-<key>.json`` lists exactly
+   the sources taken from the listing, so a file appended later is
+   neither read nor deleted;
+2. **publish**: each target is written under a hidden name and moved
+   into place (:func:`~.arrow_ipc.write_via_hidden_name`);
+3. **record**: the manifest is rewritten with each target's byte length;
+4. the sources are deleted;
+5. the manifest is retired.
+
+Every rewrite first replays the manifests a crash left behind, by one
+rule. Without a published record, the claim's targets are deleted: the
+sources were never touched, so the lake is back to its pre-state. With
+one, each target's length is checked, the surviving sources are deleted
+and the manifest is retired.
+
+Readers never list a torn file and never miss a row. Between steps 2
+and 4 they can see a rewritten row twice (in a target and in a source),
+within the lake's at-least-once contract; a table format's commit log
+closes that window (``sources/delta_lake.py``). Run one rewriter per
+lake at a time.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import json
 import os
+import re
 import tempfile
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Iterable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.ipc as ipc
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
+from pyspark.sql import SparkSession
 
-from kubernetes_logs_datalake_spark.sources.metadata import _local, glob_files
+from kubernetes_logs_datalake_spark.sources.arrow_ipc import (
+    _normalize_batch,
+    _resolve_fs,
+    _s3_options,
+    write_via_hidden_name,
+)
+from kubernetes_logs_datalake_spark.sources.logs import LogLake, write_slices
 
-
-def compaction_bins(
-    spark: SparkSession,
-    pattern: str,
-    target_bytes: int,
-    claimed: set[str] | None = None,
-) -> DataFrame:
-    """Per-FILE bin assignment — the executable form of
-    ``compaction_plan`` (which aggregates this to a report). Same
-    binning rule: within each parent dir, pack files in path order by
-    exclusive-cumsum DIV target; an oversized file closes its bin.
-    Output: (dir, bin, path, length), deterministic under re-listing.
-
-    Two exclusions keep replay bins byte-identical to a crashed run's
-    (the cumsum makes every bin a function of its NEIGHBORS, so a file
-    that re-enters or leaves the listing forks every downstream bin):
-
-    * Files this compactor itself published
-      (``compact-<hash>.parquet``) — a crashed run's target would land
-      inside its own sources' bin and double the rows. Compact outputs
-      are terminal for this compactor; re-compacting them is a
-      different generation with its own plan.
-    * Files named in ``claimed`` — sources pinned by a live manifest
-      (crash happened after the claim); their bin is finished by the
-      manifest replay, never by re-planning.
-    """
-    if target_bytes < 1:
-        raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
-    from pyspark.sql import Window
-
-    files = (
-        glob_files(spark, pattern)
-        .filter(~F.col("path").rlike("/compact-[0-9a-f]{16}\\.parquet$"))
-        .select(
-            F.regexp_replace("path", "/[^/]+$", "").alias("dir"),
-            "path",
-            "length",
-        )
-    )
-    if claimed:
-        files = files.filter(~F.col("path").isin(sorted(claimed)))
-    w = (
-        Window.partitionBy("dir")
-        .orderBy("path")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        files.withColumn(
-            "_cum", F.coalesce(F.sum("length").over(w), F.lit(0))
-        )
-        .withColumn("bin", F.expr(f"CAST(_cum DIV {target_bytes} AS LONG)"))
-        .select("dir", "bin", "path", "length")
-    )
+# Source bytes per bin. A task holds its bin decoded, several times its
+# ZSTD size; the file that crosses the bound still joins (and closes) it.
+_BIN_BYTES = 64 << 20
+# part-<uuid hex>-<slice> (write_batch), part-<epoch>-<query id>-<slice> (ingest)
+_INGEST_NAME = re.compile(r"part-[0-9a-f]+(?:-[0-9a-f]+)*\.(parquet|arrow)")
+_MANIFEST_NAME = re.compile(r"\.compact-([0-9a-f]{16})\.json")
 
 
-def _bin_hash(paths: list[str]) -> str:
+class LakeFiles:
+    """A lake root as its writers see it: ``uri`` names files for
+    :func:`write_via_hidden_name` and the Python workers, ``fs``/``base``
+    list and delete them on the driver, all through ``pyarrow.fs``."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.uri = root.rstrip("/")
+        self.s3 = _s3_options(spark, self.uri)
+        self.fs, self.base = _resolve_fs(self.uri, self.s3)
+
+    def path(self, *rel: str) -> str:
+        return "/".join([self.base, *(r for r in rel if r)])
+
+    def file_uri(self, *rel: str) -> str:
+        return "/".join([self.uri, *(r for r in rel if r)])
+
+
+class Claim(NamedTuple):
+    dir: str  # partition directory, relative to the lake root
+    key: str
+    sources: tuple[str, ...]  # file names in ``dir``
+
+    @property
+    def manifest(self) -> str:
+        return f".compact-{self.key}.json"
+
+    def targets(self, files: dict[str, int]) -> dict[str, int]:
+        """This claim's targets among ``files`` (names → bytes)."""
+        return {n: size for n, size in files.items() if n.startswith(f"part-compact-{self.key}-")}
+
+
+def claim_key(paths: Iterable[str]) -> str:
     return hashlib.sha256("\n".join(sorted(paths)).encode()).hexdigest()[:16]
 
 
-def _target_name(paths: list[str]) -> str:
-    return f"compact-{_bin_hash(paths)}.parquet"
+def _listing(lake: LakeFiles, rel: str = "") -> dict[str, dict[str, int]]:
+    """Every file under ``rel`` (hidden names included), by directory
+    relative to it: ``{dir: {name: bytes}}``."""
+    top = lake.path(rel)
+    out: dict[str, dict[str, int]] = {}
+    for info in lake.fs.get_file_info(pafs.FileSelector(top, allow_not_found=True, recursive=True)):
+        if info.type == pafs.FileType.File:
+            d, _, name = info.path[len(top):].strip("/").rpartition("/")
+            out.setdefault(d, {})[name] = info.size
+    return out
 
 
-def _manifest_name(paths: list[str]) -> str:
-    return f".compact-{_bin_hash(paths)}.sources"
+def _delete(lake: LakeFiles, rel: str, name: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        lake.fs.delete_file(lake.path(rel, name))
+
+
+def _write_manifest(lake: LakeFiles, c: Claim, body: dict) -> None:
+    data = json.dumps(body).encode()
+    write_via_hidden_name(lake.file_uri(c.dir, c.manifest), lambda sink: sink.write(data), lake.s3)
+
+
+def claim(lake: LakeFiles, c: Claim) -> None:
+    """Step 1."""
+    _write_manifest(lake, c, {"sources": list(c.sources)})
+
+
+def finish(lake: LakeFiles, c: Claim) -> None:
+    """Steps 3-5, once every target of ``c`` is published."""
+    targets = c.targets(_listing(lake, c.dir).get("", {}))
+    if not targets:
+        raise RuntimeError(f"no target published for {lake.file_uri(c.dir, c.manifest)}")
+    _write_manifest(lake, c, {"sources": list(c.sources), "published": targets})
+    _retire(lake, c)
+
+
+def _retire(lake: LakeFiles, c: Claim) -> None:
+    for name in (*c.sources, c.manifest):
+        _delete(lake, c.dir, name)
+
+
+def _replay(lake: LakeFiles, listing: dict[str, dict[str, int]]) -> bool:
+    """Finish or undo every claim in ``listing``; whether there was one."""
+    found = False
+    for rel, files in listing.items():
+        for name in files:
+            m = _MANIFEST_NAME.fullmatch(name)
+            if m is None:
+                continue
+            found = True
+            c = Claim(rel, m.group(1), ())
+            with lake.fs.open_input_stream(lake.path(rel, name)) as f:
+                body = json.loads(f.read())
+            targets = c.targets(files)
+            if "published" in body:
+                torn = sorted(n for n, size in body["published"].items() if targets.get(n) != size)
+                if torn:
+                    raise RuntimeError(
+                        f"{lake.file_uri(rel, name)}: published targets {torn} are missing or "
+                        "torn; the lake was changed outside its rewriter"
+                    )
+                c = c._replace(sources=tuple(body["sources"]))
+            else:
+                for target in targets:
+                    _delete(lake, rel, target)
+            _retire(lake, c)
+    return found
+
+
+def snapshot(lake: LakeFiles) -> dict[str, dict[str, int]]:
+    """The listing a rewrite plans from, after every claim a crashed
+    rewrite left has been replayed."""
+    listing = _listing(lake)
+    if _replay(lake, listing):
+        listing = _listing(lake)
+    return listing
+
+
+def compact_lake(spark: SparkSession, lake_root: str, min_files: int = 2) -> int:
+    """Compact every partition directory that holds at least
+    ``min_files`` ingest files of one format; returns the number of bins
+    rewritten. Per-format row counts are unchanged (compaction
+    concatenates and re-sorts, it never drops or dedups), and a re-run
+    with no new ingest files rewrites nothing."""
+    lake = LakeFiles(spark, lake_root)
+    claims = []
+    for rel, files in sorted(snapshot(lake).items()):
+        for ext in ("parquet", "arrow"):
+            sources = {
+                n: size for n, size in files.items() if (m := _INGEST_NAME.fullmatch(n)) and m.group(1) == ext
+            }
+            if len(sources) < min_files:
+                continue
+            claims += [
+                Claim(rel, claim_key(f"{rel}/{n}" for n in names), tuple(names))
+                for names in _bins(sources)
+                if len(names) > 1
+            ]
+    for c in claims:
+        claim(lake, c)
+    if claims:
+        _rewrite_bins(spark, lake, claims)
+    for c in claims:
+        finish(lake, c)
+    return len(claims)
+
+
+def _bins(sizes: dict[str, int]) -> list[list[str]]:
+    """Files packed in name order by exclusive running size DIV
+    ``_BIN_BYTES``: the file that crosses the bound still joins its bin
+    and closes it."""
+    bins: dict[int, list[str]] = {}
+    cum = 0
+    for name in sorted(sizes):
+        bins.setdefault(cum // _BIN_BYTES, []).append(name)
+        cum += sizes[name]
+    return list(bins.values())
+
+
+def _rewrite_bins(spark: SparkSession, lake: LakeFiles, claims: list[Claim]) -> None:
+    """Step 2 of compaction, one Spark job: each bin is one group of a
+    ``groupBy(dir, key).applyInArrow``, rewritten by :func:`_rewrite_bin`."""
+    uri, s3, max_rows = lake.uri, lake.s3, LogLake.max_records_per_file
+
+    def rewrite(group: tuple, sources: pa.Table) -> pa.Table:
+        rel, key = (v.as_py() for v in group)
+        dir_uri = "/".join(p for p in (uri, rel) if p)
+        names = sources.column("name").to_pylist()
+        return pa.table({"rows": [_rewrite_bin(dir_uri, key, names, max_rows, s3)]})
+
+    rows = [(c.dir, c.key, name) for c in claims for name in c.sources]
+    (
+        spark.createDataFrame(rows, "dir string, key string, name string")
+        .groupBy("dir", "key")
+        .applyInArrow(rewrite, "rows long")
+        .collect()
+    )
+
+
+def _rewrite_bin(dir_uri: str, key: str, names: list[str], max_rows: int, s3: dict | None) -> int:
+    """Read one bin's files (all of one format), decode their Arrow
+    dictionaries, and write the rows as ``part-compact-<key>-<slice>``."""
+    filesystem, path = _resolve_fs(dir_uri, s3)
+    ext = names[0].rsplit(".", 1)[1]
+    tables = []
+    for name in sorted(names):
+        with filesystem.open_input_file(f"{path}/{name}") as f:
+            table = pq.read_table(f) if ext == "parquet" else ipc.open_file(f).read_all()
+        tables.append(_normalize_batch(table, {}))
+    table = pa.concat_tables(tables, promote_options="default")
+    write_slices(table, f"{dir_uri}/part-compact-{key}", (ext,), max_rows, s3)
+    return table.num_rows
 
 
 class _Fs:
@@ -196,326 +328,3 @@ class _Fs:
         if self.exists(p):
             self.delete(p)
         self.rename(tmp_remote, p)
-
-
-# Spark's binaryFile source materializes the whole file into one JVM
-# byte[], so it hard-fails at Int.MaxValue content; stay a safe margin
-# under (JVM array headroom) and stream anything bigger.
-_BINARYFILE_MAX = 2**31 - 2**20
-
-
-def _sha256_of(
-    spark: SparkSession, path: str, binaryfile_max: int = _BINARYFILE_MAX
-) -> str:
-    """Single-file sha256. Files under Spark's ~2 GiB binary-content
-    limit go through the ``export_manifest`` recipe (binaryFile scan +
-    ``sha2`` in codegen): hashed where they live, only the 64-char
-    digest reaches the driver. Files AT or past the limit cannot use
-    binaryFile (it materializes one JVM byte[], capped at
-    Int.MaxValue, so the scan hard-fails — and a crashed verify leg
-    used to wedge every replay of a >=2 GiB bin, r10 ADVICE): they
-    stream through the driver JVM's Hadoop input stream into a
-    ``MessageDigest`` in 8 MiB chunks. The bytes stay JVM-side (py4j
-    carries only the buffer handle and the final digest), so the
-    fallback runs at I/O speed; it is a one-node read, which is the
-    honest floor for a serial hash of one oversized object — correct
-    beats wedged. ``binaryfile_max`` is parameterized so tests exercise
-    the streaming path on small files."""
-    fsx = _Fs(spark, path)
-    if fsx.length(path) < binaryfile_max:
-        rows = (
-            spark.read.format("binaryFile")
-            .load(path)
-            .select(F.sha2(F.col("content"), 256).alias("h"))
-            .collect()
-        )
-        if len(rows) != 1:
-            raise RuntimeError(
-                f"sha256: expected exactly 1 file at {path}, got {len(rows)}"
-            )
-        return rows[0]["h"]
-    jvm = fsx.jvm
-    md = jvm.java.security.MessageDigest.getInstance("SHA-256")
-    # the copy loop runs entirely JVM-side (DigestInputStream wraps the
-    # Hadoop stream; transferTo drains it into a null sink) — py4j
-    # byte[] arguments are pass-by-value, so a Python-driven
-    # read-buffer loop would hash a stale copy (and ship every byte
-    # through the gateway besides)
-    stream = jvm.java.security.DigestInputStream(
-        fsx.fs.open(fsx.hpath(path)), md
-    )
-    try:
-        stream.transferTo(jvm.java.io.OutputStream.nullOutputStream())
-    finally:
-        stream.close()
-    digest = md.digest()
-    # hex via BigInteger (always on the classpath) — zero-padded to 64
-    hx = jvm.java.math.BigInteger(1, digest).toString(16)
-    return hx.rjust(64, "0")
-
-
-def _write_manifest(
-    fsx: _Fs, dir_: str, paths: list[str], expected_len: int,
-    expected_sha: str,
-) -> str:
-    mpath = os.path.join(dir_, _manifest_name(paths))
-    body = (
-        f"{expected_len} {expected_sha}\n" + "\n".join(sorted(paths)) + "\n"
-    )
-    fsx.write_small_atomic(mpath, body.encode())
-    return mpath
-
-
-def _read_manifest(fsx: _Fs, mpath: str) -> tuple[int, str | None, list[str]]:
-    """(expected_len, expected_sha | None, paths). The sha field landed
-    in r10; a pre-r10 manifest (bare length) still replays, with the
-    weaker length-only target check it was written under."""
-    lines = fsx.read_small(mpath).decode().splitlines()
-    head = lines[0].split()
-    sha = head[1] if len(head) > 1 else None
-    return int(head[0]), sha, [ln for ln in lines[1:] if ln]
-
-
-def _stage_part(
-    spark: SparkSession, fsx: _Fs, dir_: str, paths: list[str]
-) -> tuple[str, str]:
-    """One distributed read of exactly this bin's files, one output
-    file, into a hidden ``_compact-stage-…`` dir. The shuffle-free
-    coalesce(1) narrows the write, it does NOT re-sort — row order is
-    concatenation in path order. Returns (stage_dir, part_path)."""
-    stage_dir = os.path.join(dir_, f"_compact-stage-{_bin_hash(paths)}")
-    fsx.delete(stage_dir)
-    (
-        spark.read.parquet(*sorted(paths))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(_local(stage_dir))
-    )
-    parts = fsx.glob(os.path.join(stage_dir, "part-*.parquet"))
-    if len(parts) != 1:
-        raise RuntimeError(f"expected 1 staged part in {stage_dir}, got {parts}")
-    return stage_dir, parts[0]
-
-
-def _publish(
-    spark: SparkSession,
-    fsx: _Fs,
-    part: str,
-    target: str,
-    expected_len: int,
-    expected_sha: str,
-    publish_mode: str,
-) -> None:
-    if publish_mode == "rename":
-        fsx.rename(part, target)
-    elif publish_mode == "copy":
-        fsx.copy(part, target)
-        got = fsx.length(target)
-        if got != expected_len:
-            raise RuntimeError(
-                f"torn publish of {target}: {got} bytes != {expected_len}"
-            )
-        # content verify (r9 ADVICE-high follow-up): a torn PUT with a
-        # coincidentally-correct length passed the length check; the
-        # sha256 re-read closes it. One distributed read of the target
-        # per publish — the price of not trusting the store's PUT.
-        got_sha = _sha256_of(spark, target)
-        if got_sha != expected_sha:
-            raise RuntimeError(
-                f"torn publish of {target}: sha256 {got_sha} != "
-                f"{expected_sha} (length matched — content did not)"
-            )
-    else:
-        raise ValueError(f"unknown publish_mode {publish_mode!r}")
-
-
-def _finish_claim(
-    fsx: _Fs, paths: list[str], existing: list[str], mpath: str
-) -> None:
-    """The post-publish half of every bin: delete claimed sources, then
-    retire the manifest. Crash anywhere inside → the manifest survives,
-    the claim replays, planning never sees the survivors."""
-    for p in existing:
-        fsx.delete(p)
-    fsx.delete(mpath)
-
-
-def _rewrite_bin(
-    spark: SparkSession,
-    fsx: _Fs,
-    dir_: str,
-    paths: list[str],
-    publish_mode: str,
-) -> str:
-    """Execute one planned bin's state machine; returns the action."""
-    target = os.path.join(dir_, _target_name(paths))
-    existing = [p for p in paths if fsx.exists(p)]
-    if fsx.exists(target):
-        action = "replayed_delete" if existing else "already_done"
-        # claim before the first source delete even on this path, where
-        # a pre-manifest-era target exists but sources linger
-        mpath = _write_manifest(
-            fsx, dir_, paths, fsx.length(target), _sha256_of(spark, target)
-        )
-    else:
-        if len(existing) < len(paths):
-            # target missing AND some sources gone: a concurrent writer
-            # broke the plan's snapshot — refuse rather than guess
-            raise RuntimeError(
-                f"bin in {dir_} lost {len(paths) - len(existing)} source "
-                f"files without a published target; re-plan before rerun"
-            )
-        stage_dir, part = _stage_part(spark, fsx, dir_, paths)
-        expected_len = fsx.length(part)
-        expected_sha = _sha256_of(spark, part)
-        mpath = _write_manifest(fsx, dir_, paths, expected_len, expected_sha)
-        _publish(
-            spark, fsx, part, target, expected_len, expected_sha,
-            publish_mode,
-        )
-        fsx.delete(stage_dir)
-        action = "rewritten"
-    _finish_claim(fsx, paths, existing, mpath)
-    return action
-
-
-def _replay_claim(
-    spark: SparkSession,
-    fsx: _Fs,
-    dir_: str,
-    mpath: str,
-    publish_mode: str,
-) -> tuple[str, str, int, int]:
-    """Finish an interrupted claimed bin found via its manifest.
-    Returns (target, action, n_sources, bytes_remaining)."""
-    expected_len, expected_sha, paths = _read_manifest(fsx, mpath)
-    target = os.path.join(dir_, _target_name(paths))
-    existing = [p for p in paths if fsx.exists(p)]
-    bytes_left = sum(fsx.length(p) for p in existing)
-    stage_dir = os.path.join(dir_, f"_compact-stage-{_bin_hash(paths)}")
-    # content verify on replay: a torn target with a coincidentally
-    # correct length (same-length corruption) must NOT count as ok
-    target_ok = (
-        fsx.exists(target)
-        and fsx.length(target) == expected_len
-        and (expected_sha is None or _sha256_of(spark, target) == expected_sha)
-    )
-    if target_ok:
-        action = "replayed_delete" if existing else "already_done"
-        # a crash between _publish and the stage delete leaves the
-        # stage dir behind this path forever once the manifest retires
-        # (r10 ADVICE): in copy mode it holds a full hidden duplicate
-        # of the bin's bytes — clean it here too
-        fsx.delete(stage_dir)
-    else:
-        if fsx.exists(target):  # torn copy-mode publish
-            fsx.delete(target)
-        parts = fsx.glob(os.path.join(stage_dir, "part-*.parquet"))
-        if (
-            parts
-            and fsx.length(parts[0]) == expected_len
-            and (
-                expected_sha is None
-                or _sha256_of(spark, parts[0]) == expected_sha
-            )
-        ):
-            part = parts[0]  # publish crashed; the stage is intact
-        else:
-            if len(existing) < len(paths):
-                raise RuntimeError(
-                    f"claimed bin {mpath} has no valid target, a missing "
-                    f"stage, and {len(paths) - len(existing)} missing "
-                    f"sources; the lake was modified outside the compactor"
-                )
-            stage_dir, part = _stage_part(spark, fsx, dir_, paths)
-            # a re-staged parquet can differ in byte length (writer
-            # metadata); re-pin the claim to the bytes we will publish
-            expected_len = fsx.length(part)
-            expected_sha = _sha256_of(spark, part)
-            _write_manifest(fsx, dir_, paths, expected_len, expected_sha)
-        if expected_sha is None:
-            # pre-r10 manifest replayed with an intact stage: pin the
-            # content before publish so the verify leg still runs
-            expected_sha = _sha256_of(spark, part)
-        _publish(
-            spark, fsx, part, target, expected_len, expected_sha,
-            publish_mode,
-        )
-        fsx.delete(stage_dir)
-        action = "replayed_publish"
-    _finish_claim(fsx, paths, existing, mpath)
-    return target, action, len(paths), bytes_left
-
-
-def compact_files(
-    spark: SparkSession,
-    pattern: str,
-    target_bytes: int,
-    max_parallel_bins: int = 4,
-    publish_mode: str = "rename",
-) -> DataFrame:
-    """Execute the compaction plan for ``pattern``: every multi-file
-    bin is rewritten to one deterministically-named file and its
-    sources removed; single-file bins are untouched. Idempotent — a
-    crashed run re-converges on re-run (see module docstring) — and
-    query-preserving: the compacted lake returns byte-identical results
-    (order-insensitive; compaction concatenates, never drops/edits).
-
-    Replays any interrupted claims (sidecar manifests) FIRST, excludes
-    their sources from planning, then executes fresh bins.
-
-    Returns the execution report: (dir, bin, n_source_files, bytes_in,
-    target, action), action ∈ {rewritten, replayed_publish,
-    replayed_delete, already_done, skip_single}; replayed claims carry
-    bin = -1 (their membership comes from the manifest, not the plan).
-    """
-    # the manifest glob derives from the pattern's directory part; a
-    # separator-less pattern would yield a nonsense glob, phase 0 would
-    # silently find no claims, and the replay-duplication protection
-    # would be quietly bypassed (r10 ADVICE) — refuse instead
-    if "/" not in pattern:
-        raise ValueError(
-            f"pattern {pattern!r} has no directory component; pass "
-            "'<dir>/<file-glob>' so claim manifests can be discovered"
-        )
-    fsx = _Fs(spark, pattern)
-    report = []
-
-    # phase 0: finish interrupted claims before planning
-    dir_pattern = pattern.rsplit("/", 1)[0]
-    claimed: set[str] = set()
-    for mpath in fsx.glob(os.path.join(dir_pattern, ".compact-*.sources")):
-        mdir = mpath.rsplit("/", 1)[0]
-        _, _, cpaths = _read_manifest(fsx, mpath)
-        claimed.update(cpaths)
-        target, action, n_src, bytes_left = _replay_claim(
-            spark, fsx, mdir, mpath, publish_mode
-        )
-        report.append((mdir, -1, n_src, bytes_left, target, action))
-
-    # phase 1: plan over unclaimed files, execute fresh bins
-    rows = compaction_bins(spark, pattern, target_bytes, claimed=claimed).collect()
-    bins: dict[tuple[str, int], list] = {}
-    for r in rows:
-        bins.setdefault((r.dir, r.bin), []).append(r)
-
-    def run_bin(key):
-        dir_, b = key
-        members = sorted(bins[key], key=lambda r: r.path)
-        paths = [m.path for m in members]
-        total = sum(m.length for m in members)
-        if len(paths) == 1:
-            action, target = "skip_single", None
-        else:
-            action = _rewrite_bin(spark, fsx, dir_, paths, publish_mode)
-            target = os.path.join(dir_, _target_name(paths))
-        return (dir_, b, len(paths), total, target, action)
-
-    with ThreadPoolExecutor(max_workers=max_parallel_bins) as pool:
-        report += list(pool.map(run_bin, sorted(bins)))
-
-    return spark.createDataFrame(
-        report,
-        "dir string, bin long, n_source_files int, bytes_in long, "
-        "target string, action string",
-    ).orderBy("dir", "bin")

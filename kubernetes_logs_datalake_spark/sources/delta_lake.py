@@ -7,7 +7,8 @@ installed. What the transaction log buys over the hand-rolled path:
 
 - **atomic compaction** — ``OPTIMIZE``-style bin-packing commits a new
   table version in one log entry, so readers never see a partition
-  mid-rewrite (``compact_lake``'s rename window, documented there,
+  mid-rewrite (``compact_lake``'s window between publishing its targets
+  and deleting its sources, documented in ``sources/compact.py``,
   disappears);
 - **concurrent writers** — optimistic concurrency on the log replaces
   "snapshot the listing and hope";
@@ -19,15 +20,18 @@ hard-imports ``delta``. The write layout mirrors ``LogLake`` exactly
 (hive partitioning on NATIVE_PARTITIONING, time-clustered files) so a
 lake can be migrated table-format-only.
 
-**Documented substitution where delta-spark is absent** (this build
-environment has no delta-spark and no network to fetch the jars, so
-the OPTIMIZE path cannot execute here): the plain-parquet ``LogLake``
-plus ``streaming.ingest.compact_lake`` provide the same write layout
-and compaction behavior minus transactional atomicity — the rename
-window and its consequences are documented on ``compact_lake``. Every
-Delta API in this module maps 1:1 onto that fallback (write_batch ↔
-write_batch, compact ↔ compact_lake, read_stream ↔ LogLake.read_stream)
-so code written against either surface migrates mechanically.
+**Documented substitution where delta-spark is absent** (delta-spark
+is not a dependency of this package, and without it the OPTIMIZE path
+cannot execute): the plain ``LogLake`` plus
+``sources.compact.compact_lake`` provide the same write layout and
+compaction behavior minus transactional atomicity. ``compact_lake``
+publishes under a claim protocol (manifest → publish → published
+record → delete sources → retire), so a crash is finished or undone by
+the next run, but readers see rewritten rows twice between publish and
+delete. Every Delta API in this module maps 1:1 onto that fallback
+(write_batch ↔ write_batch, compact ↔ compact_lake, read_stream ↔
+LogLake.read_stream) so code written against either surface migrates
+mechanically.
 """
 
 from __future__ import annotations
@@ -117,7 +121,7 @@ class DeltaLogLake:
 
     def compact(self, spark: SparkSession) -> None:
         """OPTIMIZE bin-packing — the transactional replacement for
-        ``streaming.ingest.compact_lake``: one atomic log commit, no
+        ``sources.compact.compact_lake``: one atomic log commit, no
         reader-visible intermediate state, concurrent-writer-safe."""
         self._require()
         from delta.tables import DeltaTable

@@ -69,6 +69,27 @@ def _write_parquet_file(table: pa.Table, dest: str, s3: dict | None = None) -> N
     ), s3)
 
 
+def write_slices(
+    table: pa.Table, prefix: str, formats: tuple[str, ...], max_rows: int, s3: dict | None = None
+) -> None:
+    """One partition's rows as lake files: sorted by ``time_ns`` and cut
+    into slices of at most ``max_rows`` rows (T2), each written as
+    ``<prefix>-<slice>.parquet`` (``time_ns`` + µs ``time``) and/or
+    ``.arrow`` (no µs ``time``). Sorted slices cover disjoint time
+    ranges, so ``--since`` skips whole files and row groups. The ingest
+    writer and the compactor both write through here, so every lake file
+    has one shape."""
+    table = table.sort_by("time_ns")
+    arrow_cols = [c for c in table.column_names if c != "time"]
+    for i, start in enumerate(range(0, table.num_rows, max_rows)):
+        part = table.slice(start, max_rows)
+        dest = f"{prefix}-{i:05d}"
+        if "parquet" in formats:
+            _write_parquet_file(part, dest + ".parquet", s3)
+        if "arrow" in formats:
+            write_arrow_file(part.select(arrow_cols), dest + ".arrow", s3)
+
+
 def _ensure_date(df: DataFrame) -> DataFrame:
     if "date" in df.columns:
         return df
@@ -134,12 +155,10 @@ class LogLake:
         as the reference writes both files from one buffer
         (``compact_columns.c:332-418``). ``groupBy(cluster, namespace,
         date).applyInArrow`` hands each partition to one task, which
-        sorts it by ``time_ns`` and writes slices of at most
-        ``max_records_per_file`` rows (T2) as
-        ``part-<batch_id>-<slice>.parquet`` (``time_ns`` + µs ``time``)
-        and/or ``.arrow`` (no µs ``time``). Sorted slices cover disjoint
-        time ranges, so ``--since`` skips whole files and row groups.
-        At most two Spark jobs, nothing persisted. Each file is written
+        writes it through :func:`write_slices` as
+        ``part-<batch_id>-<slice>`` files of at most
+        ``max_records_per_file`` rows. At most two Spark jobs, nothing
+        persisted. Each file is written
         under a hidden name and moved into place, so readers never list a
         half-written file, and the same rows written again under the same
         ``batch_id`` replace their files.
@@ -155,15 +174,7 @@ class LogLake:
 
         def write_group(key: tuple, table: pa.Table) -> pa.Table:
             rel = "/".join(f"{c}={hive_dir_value(v.as_py())}" for c, v in zip(parts, key))
-            table = table.drop_columns(parts).sort_by("time_ns")
-            arrow_cols = [c for c in table.column_names if c != "time"]
-            for i, start in enumerate(range(0, table.num_rows, max_rows)):
-                part = table.slice(start, max_rows)
-                dest = f"{root}/{rel}/part-{batch_id}-{i:05d}"
-                if "parquet" in formats:
-                    _write_parquet_file(part, dest + ".parquet", s3)
-                if "arrow" in formats:
-                    write_arrow_file(part.select(arrow_cols), dest + ".arrow", s3)
+            write_slices(table.drop_columns(parts), f"{root}/{rel}/part-{batch_id}", formats, max_rows, s3)
             return pa.table({"rows": [table.num_rows]})
 
         _ensure_date(df).groupBy(*parts).applyInArrow(write_group, "rows long").collect()

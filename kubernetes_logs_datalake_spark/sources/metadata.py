@@ -115,53 +115,3 @@ def schema_diff(spark: SparkSession, path_a: str, path_b: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "name string, status string, type_a string, type_b string"
     )
-
-
-def compaction_plan(
-    spark: SparkSession, pattern: str, target_bytes: int
-) -> DataFrame:
-    """Small-file compaction plan over a file listing: within each
-    parent directory (= partition), files are packed in path order into
-    bins of ~``target_bytes`` by exclusive running size — the rewrite
-    plan an OPTIMIZE/compact job executes. Output: (dir, bin, n_files,
-    total_bytes, n_compacted) where a single-file bin is already
-    right-sized (nothing to rewrite) and n_compacted counts the files a
-    rewrite would actually touch.
-
-    One directory-keyed window over the LISTING (metadata rows, not
-    data); binning is exclusive-cumsum DIV target, so the plan is
-    deterministic under re-listing and an oversized file never splits —
-    it simply closes its bin. At 100 TB the listing is millions of
-    rows, not bytes of data, and the window keys on the partition dir.
-    """
-    if target_bytes < 1:
-        raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    files = glob_files(spark, pattern).select(
-        F.regexp_replace("path", "/[^/]+$", "").alias("dir"),
-        "path",
-        "length",
-    )
-    w = (
-        Window.partitionBy("dir")
-        .orderBy("path")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # integer DIV, not double division — exact past 2^53 total bytes
-    binned = files.withColumn(
-        "_cum", F.coalesce(F.sum("length").over(w), F.lit(0))
-    ).withColumn("bin", F.expr(f"CAST(_cum DIV {target_bytes} AS LONG)"))
-    return (
-        binned.groupBy("dir", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum("length").alias("total_bytes"),
-        )
-        .withColumn(
-            "n_compacted",
-            F.when(F.col("n_files") > 1, F.col("n_files")).otherwise(0),
-        )
-        .orderBy("dir", "bin")
-    )

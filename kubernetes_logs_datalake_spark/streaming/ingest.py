@@ -34,8 +34,9 @@ Spark-first mapping (not a port):
 
 At 100 TB/day the same topology holds: one stream per cluster (or a
 shared S3 inventory stream), file-offset checkpoints in object storage,
-one grouped write per batch, and a periodic compaction pass for small files
-(``compact_lake``).
+one grouped write per batch, and a periodic compaction pass that rewrites
+each partition's micro-batch files of both formats through the same
+writer (``sources.compact.compact_lake``).
 """
 
 from __future__ import annotations
@@ -101,8 +102,8 @@ class IngestJob:
         return self._query
 
     def _checkpoint(self) -> str:
-        # lives OUTSIDE the lake root so compaction's directory swap can
-        # never clobber stream offsets
+        # lives OUTSIDE the lake root, so lake listings (reads,
+        # compaction) never see offset files
         return self.checkpoint or (self.lake_root.rstrip("/") + "_checkpoint")
 
     def _write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -142,96 +143,3 @@ def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str:
         return json.loads(reader.readLine())["id"].replace("-", "")
     finally:
         reader.close()
-
-
-def _parquet_files_by_dir(fs, root) -> dict[str, list[str]]:
-    """Recursive data-file listing grouped by parent directory (Hadoop
-    FileSystem API — works on any scheme), skipping _SUCCESS/.crc and
-    other marker files."""
-    by_dir: dict[str, list[str]] = {}
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        p = it.next().getPath()
-        name = p.getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            by_dir.setdefault(p.getParent().toString(), []).append(p.toString())
-    return by_dir
-
-
-def compact_lake(
-    spark: SparkSession,
-    lake_root: str,
-    target_records_per_file: int = 5_000_000,
-    min_files: int = 2,
-) -> None:
-    """Small-file compaction (the OPTIMIZE-style answer to micro-batch
-    files the reference simply accepts). Rewrites each partition's many
-    small parquet files into few large time-clustered ones; idempotent
-    under re-run — at-least-once duplicates from ingest are NOT removed
-    (they are an ingest contract), only file counts change.
-
-    Object-store-safe, Hadoop FileSystem API end to end (``s3a://`` and
-    local paths take the same code path):
-
-    1. snapshot the parquet listing, keeping partitions with
-       ≥ ``min_files`` files;
-    2. read EXACTLY the snapshot files (basePath keeps hive values);
-    3. write compacted files to a sibling temp tree;
-    4. rename them into the live partition dirs, then delete exactly
-       the snapshot files — never a whole-tree swap, so the Arrow side
-       of a dual-format lake and any checkpoint dirs are untouched.
-
-    Concurrent WRITERS are safe: a batch appended after the snapshot is
-    neither read nor deleted (the old swap deleted it). Concurrent
-    READERS can transiently see a compacted file next to its inputs —
-    duplicate rows within the lake's at-least-once contract; compact
-    quiesced partitions (e.g. closed days) where exactly-once reads
-    matter, or use a transactional table format (Delta OPTIMIZE) —
-    see ``sources.delta_lake``.
-    """
-    import uuid as uuidmod
-
-    from kubernetes_logs_datalake_spark.schema import NATIVE_PARTITIONING
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(lake_root)
-    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    qroot = fs.makeQualified(root)
-    targets = {
-        d: fl
-        for d, fl in _parquet_files_by_dir(fs, qroot).items()
-        if len(fl) >= min_files
-    }
-    if not targets:
-        return
-    snapshot = [f for fl in targets.values() for f in fl]
-    df = spark.read.option("basePath", qroot.toString()).parquet(*snapshot)
-    tmp_root = qroot.toString().rstrip("/") + f"_compacting_{uuidmod.uuid4().hex}"
-    # the same physical layout as LogLake.write_formats: files sorted on
-    # time_ns within each partition, covering disjoint time ranges, so
-    # their row groups zone-map-skip under --since predicates
-    cols = [F.col(c) for c in NATIVE_PARTITIONING] + [F.col("time_ns")]
-    (
-        df.repartitionByRange(*cols)
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-        .partitionBy(*NATIVE_PARTITIONING)
-        .parquet(tmp_root)
-    )
-    qtmp = fs.makeQualified(hpath(tmp_root))
-    tmp_prefix = qtmp.toString()
-    for _d, files in _parquet_files_by_dir(fs, qtmp).items():
-        for f in files:
-            rel = f[len(tmp_prefix):].lstrip("/")
-            dest = hpath(qroot.toString() + "/" + rel)
-            fs.mkdirs(dest.getParent())
-            if not fs.rename(hpath(f), dest):
-                raise OSError(f"compaction rename failed: {f} -> {dest}")
-    for f in snapshot:
-        fs.delete(hpath(f), False)
-    fs.delete(qtmp, True)

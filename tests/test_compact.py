@@ -1,421 +1,372 @@
-"""Executing compactor: idempotence, crash replay, query preservation.
+"""The lake rewriter (``sources/compact.py``): compaction of both formats
+through the ingest writer, and crash replay of its claim protocol.
 
-The r7 gap: ``compaction_plan`` binned files but nothing rewrote them.
-``compact_files`` executes the plan; these tests pin the at-least-once
-contract (SURVEY §7.5): re-run converges, a crash between publish and
-source-delete replays to the same state, and a query over the lake
-hashes identically pre/post compaction while scanning fewer files.
+Each lake here is a few tiny ingest batches written by
+``LogLake.write_formats``. A crash is injected at one protocol step, the
+next run must converge to exact per-format counts with one compacted file
+per format and no manifest, and a further run must change no file.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+import pyarrow.ipc as ipc
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
-from kubernetes_logs_datalake_spark.sources.compact import (
-    _target_name,
-    compact_files,
-    compaction_bins,
-)
+from kubernetes_logs_datalake_spark.plans import LogQuery
+from kubernetes_logs_datalake_spark.sources import LogLake, parse_cri_lines
+from kubernetes_logs_datalake_spark.sources import compact as cmod
+from kubernetes_logs_datalake_spark.sources.compact import compact_lake
 
-
-def _write_lake(spark, root, n_parts=2, files_per_part=6, rows_per_file=50):
-    """Many tiny files across partition dirs; returns row count."""
-    n = 0
-    for p in range(n_parts):
-        d = os.path.join(root, f"part={p}")
-        os.makedirs(d, exist_ok=True)
-        for f in range(files_per_part):
-            df = spark.range(n, n + rows_per_file).select(
-                F.col("id"), (F.col("id") % 7).alias("v")
-            )
-            df.coalesce(1).write.mode("overwrite").parquet(f"{d}/_stage")
-            part = next(
-                x
-                for x in os.listdir(f"{d}/_stage")
-                if x.startswith("part-") and x.endswith(".parquet")
-            )
-            os.replace(f"{d}/_stage/{part}", f"{d}/f-{f:03d}.parquet")
-            import shutil
-
-            shutil.rmtree(f"{d}/_stage")
-            n += rows_per_file
-    return n
+FORMATS = ("parquet", "arrow")
+QUERY_ID = "ab" * 16  # an ingest stream's query id (hex)
 
 
-def _lake_hash(spark, root):
-    rows = sorted(
-        (r.id, r.v)
-        for r in spark.read.parquet(f"{root}/part=*/").collect()
-    )
-    return hash(tuple(rows)), len(rows)
+def _batch(spark, lake, b, namespaces=("qa",), cluster="dev", rows=5):
+    """Ingest batch ``b``: ``rows`` records per namespace, both formats,
+    one file per format and partition."""
+    lines = [
+        (
+            f"/var/log/pods/{ns}_p-1_uid/app/0.log",
+            f"2024-01-15T10:{b:02d}:{i:02d}.{i:09d}Z stdout F {ns}-b{b}-{i}",
+        )
+        for ns in namespaces
+        for i in range(rows)
+    ]
+    raw = spark.createDataFrame(lines, ["path", "value"])
+    records = parse_cri_lines(raw, path_col="path", cluster=cluster, node="n1")
+    lake.write_formats(records, FORMATS, f"{b:05d}-{QUERY_ID}")
 
 
-def _data_files(root):
-    out = []
-    for d, _, fs in os.walk(root):
-        out += [
-            os.path.join(d, f)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-    return sorted(out)
+def _lake(spark, root, batches=3, **kw):
+    lake = LogLake(root)
+    for b in range(batches):
+        _batch(spark, lake, b, **kw)
+    return lake
+
+
+def _messages(spark, lake, fmt, **kw):
+    return Counter(r.message for r in lake.read(spark, fmt, **kw).collect())
+
+
+def _files(root):
+    """{relative path: (inode, mtime, size)} of every file, hidden ones too."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.relpath(os.path.join(d, n), root)] = (st.st_ino, st.st_mtime_ns, st.st_size)
+    return out
+
+
+def _names(root, ext):
+    return sorted(p for p in _files(root) if p.endswith(f".{ext}") and not os.path.basename(p).startswith("."))
+
+
+def _scans(df, fmt_name):
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        else:
+            if cls == "FileSourceScanExec" and fmt_name in p.relation().fileFormat().toString().lower():
+                out.append(p)
+            stack.extend(p.children().apply(i) for i in range(p.children().size()))
+    return out
+
+
+def _files_decoded(df) -> int:
+    df.collect()
+    total = 0
+    for scan in _scans(df, "binaryfile"):
+        m = scan.metrics().get("numFiles")
+        total += int(m.get().value()) if m.isDefined() else 0
+    return total
 
 
 def test_compact_reduces_files_preserves_query(spark, tmp_path):
+    """Four batches over two namespaces: each partition's files of each
+    format become one, every record survives once per format, and the
+    compacted files have the ingest shape."""
     root = str(tmp_path / "lake")
-    _write_lake(spark, root)
-    before_hash = _lake_hash(spark, root)
-    n_before = len(_data_files(root))
+    lake = _lake(spark, root, batches=4, namespaces=("qa", "prod"))
+    before = {fmt: _messages(spark, lake, fmt) for fmt in FORMATS}
+    assert all(sum(c.values()) == 40 and set(c.values()) == {1} for c in before.values())
+    ingest = {fmt: _names(root, fmt) for fmt in FORMATS}
+    assert all(len(v) == 8 for v in ingest.values())
+    shapes = {
+        "parquet": pq.read_schema(os.path.join(root, ingest["parquet"][0])),
+        "arrow": ipc.open_file(os.path.join(root, ingest["arrow"][0])).schema,
+    }
 
-    rep = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-    ).collect()
-    assert all(r.action == "rewritten" for r in rep)
+    assert compact_lake(spark, root) == 4  # 2 partitions x 2 formats
 
-    n_after = len(_data_files(root))
-    assert n_after < n_before and n_after == 2  # one file per partition
-    assert _lake_hash(spark, root) == before_hash
+    for fmt in FORMATS:
+        names = _names(root, fmt)
+        assert len(names) == 2 and all("/part-compact-" in n for n in names), names
+        assert _messages(spark, lake, fmt) == before[fmt]
+    for name in _names(root, "parquet"):
+        f = pq.ParquetFile(os.path.join(root, name))
+        assert f.schema_arrow == shapes["parquet"]
+        col = f.metadata.row_group(0).column(0)
+        assert (col.path_in_schema, col.compression) == ("time_ns", "ZSTD")
+        assert "DELTA_BINARY_PACKED" in col.encodings
+        times = f.read().column("time_ns").to_pylist()
+        assert times == sorted(times) and len(times) == 20
+    for name in _names(root, "arrow"):
+        assert ipc.open_file(os.path.join(root, name)).schema == shapes["arrow"]
+
+
+def test_compaction_cuts_files_decoded_per_query(spark, tmp_path):
+    """A one-namespace Arrow query decodes one file per batch before
+    compaction and one file after it."""
+    root = str(tmp_path / "lake")
+    lake = _lake(spark, root, batches=4, namespaces=("qa", "prod"))
+    query = LogQuery(lake, cluster="dev", selectors={"namespace": "qa"}, fmt="arrow")
+    assert _files_decoded(query.df(spark)) == 4
+    compact_lake(spark, root)
+    df = query.df(spark)
+    assert _files_decoded(df) == 1
+    assert df.count() == 20
+
+
+def test_compaction_keeps_escaped_and_all_digit_partition_values(spark, tmp_path):
+    """Cluster ``a:b`` (escaped as ``a%3Ab``) and namespace ``007`` keep
+    their directories and their rows in both formats."""
+    root = str(tmp_path / "lake")
+    lake = _lake(spark, root, namespaces=("007",), cluster="a:b")
+    dirs = {os.path.dirname(p) for p in _names(root, "parquet") + _names(root, "arrow")}
+    assert dirs == {"cluster=a%3Ab/namespace=007/date=2024-01-15"}
+    sel = {"cluster": "a:b", "selectors": {"namespace": "007"}}
+    assert {fmt: lake.read(spark, fmt, **sel).count() for fmt in FORMATS} == {"parquet": 15, "arrow": 15}
+
+    compact_lake(spark, root)
+
+    assert {os.path.dirname(p) for p in _names(root, "parquet") + _names(root, "arrow")} == dirs
+    assert {fmt: len(_names(root, fmt)) for fmt in FORMATS} == {"parquet": 1, "arrow": 1}
+    assert {fmt: lake.read(spark, fmt, **sel).count() for fmt in FORMATS} == {"parquet": 15, "arrow": 15}
 
 
 def test_compact_rerun_is_noop(spark, tmp_path):
     root = str(tmp_path / "lake")
-    _write_lake(spark, root)
-    compact_files(spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30)
-    files = _data_files(root)
-    rep2 = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-    ).collect()
-    # compact outputs are excluded from binning (terminal for this
-    # generation), so a second run finds nothing to do at all
-    assert rep2 == []
-    assert _data_files(root) == files
+    _lake(spark, root)
+    assert compact_lake(spark, root) == 2
+    files = _files(root)
+    # compacted files are never sources, so nothing is left to rewrite
+    assert compact_lake(spark, root) == 0
+    assert _files(root) == files
 
 
-def test_compact_crash_between_publish_and_delete_replays(spark, tmp_path):
-    """Simulate the worst crash: target published, sources still on
-    disk (the at-least-once duplicate window). Re-run must delete the
-    sources without rewriting, landing on the exact same lake state."""
+def test_compact_oversized_file_untouched(spark, tmp_path, monkeypatch):
+    """A bin bound below every file size: each file closes its own bin,
+    and a one-file bin is not rewritten."""
     root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1)
-    d = os.path.join(root, "part=0")
-    paths = [f"file:{p}" for p in _data_files(d)]
-
-    # hand-publish the deterministic target, keep the sources
-    src = spark.read.parquet(*sorted(paths))
-    src.coalesce(1).write.mode("overwrite").parquet(f"{d}/_stage")
-    part = next(
-        x
-        for x in os.listdir(f"{d}/_stage")
-        if x.startswith("part-") and x.endswith(".parquet")
-    )
-    os.replace(f"{d}/_stage/{part}", os.path.join(d, _target_name(paths)))
-    import shutil
-
-    shutil.rmtree(f"{d}/_stage")
-    # duplicate window is visible (reader sees the bin twice)...
-    assert spark.read.parquet(d).count() == 2 * total
-
-    rep = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-    ).collect()
-    # ...but replay converges: sources deleted, target kept, rows exact
-    acts = {r.action for r in rep}
-    assert "replayed_delete" in acts
-    assert spark.read.parquet(d).count() == total
+    _lake(spark, root)
+    files = _files(root)
+    monkeypatch.setattr(cmod, "_BIN_BYTES", 1)
+    assert compact_lake(spark, root) == 0
+    assert _files(root) == files
 
 
-def test_compact_oversized_file_untouched(spark, tmp_path):
+def test_bins_pack_by_exclusive_running_size(monkeypatch):
+    """Running sizes 0, 40, 80, 120 against a bound of 100 give bins
+    0, 0, 0, 1; an oversized file closes its bin."""
+    monkeypatch.setattr(cmod, "_BIN_BYTES", 100)
+    assert cmod._bins({f"f{i}": 40 for i in range(4)}) == [["f0", "f1", "f2"], ["f3"]]
+    assert cmod._bins({"a": 10, "big": 250, "z": 10}) == [["a", "big"], ["z"]]
+
+
+def test_compact_leaves_files_appended_after_the_listing(spark, tmp_path, monkeypatch):
+    """A batch written between the listing and the rewrite is neither
+    read nor deleted."""
     root = str(tmp_path / "lake")
-    _write_lake(spark, root, n_parts=1, files_per_part=3)
-    before = _data_files(root)
-    # target smaller than any single file: every file is its own bin
-    rep = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=10
-    ).collect()
-    assert all(r.action == "skip_single" for r in rep)
-    assert _data_files(root) == before
+    lake = _lake(spark, root)
+    real = cmod._listing
+    calls = []
 
+    def listing_then_append(*args):
+        out = real(*args)
+        if not calls:
+            _batch(spark, lake, 9)
+        calls.append(1)
+        return out
 
-def test_compaction_bins_rejects_bad_target(spark):
-    with pytest.raises(ValueError, match="target_bytes"):
-        compaction_bins(spark, "/tmp/nope/*.parquet", 0)
-
-
-def test_compact_crash_mid_source_delete_does_not_duplicate(
-    spark, tmp_path, monkeypatch
-):
-    """THE replay-duplication hole (r8 ADVICE, high): crash partway
-    through the source-delete loop. The survivors' exclusive-cumsum bin
-    assignment would shift on re-listing — landing them in a NEW bin
-    whose target is absent, so the old code rewrote their rows a second
-    time next to the published target. The sidecar manifest pins the
-    bin before the first delete; replay must finish the claimed bin,
-    never re-bin the survivors."""
-    import kubernetes_logs_datalake_spark.sources.compact as compact_mod
-
-    root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1, files_per_part=6)
-    d = os.path.join(root, "part=0")
-
-    real_finish = compact_mod._finish_claim
-
-    def crash_after_two(fsx, paths, existing, mpath):
-        for p in existing[:2]:
-            fsx.delete(p)
-        raise RuntimeError("injected crash mid source-delete")
-
-    monkeypatch.setattr(compact_mod, "_finish_claim", crash_after_two)
-    with pytest.raises(Exception, match="injected crash"):
-        compact_files(spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30)
-
-    # crashed state: target published, manifest live, 4 of 6 sources left
-    assert len(_data_files(d)) == 1 + 4
-    assert any(f.startswith(".compact-") for f in os.listdir(d))
-
-    monkeypatch.setattr(compact_mod, "_finish_claim", real_finish)
-    rep = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-    ).collect()
-    assert [r.action for r in rep] == ["replayed_delete"]
-    assert rep[0].bin == -1  # membership came from the manifest
-    # converged: one compact file, exact rows, no duplicates, no manifest
-    assert len(_data_files(d)) == 1
-    assert spark.read.parquet(d).count() == total
-    # no manifest remnants (the target's hadoop-local .crc sidecar may
-    # remain — it is the checksum of the published file, not state)
-    assert not any(".sources" in f for f in os.listdir(d))
-    # and a further re-run is a clean no-op
-    assert (
-        compact_files(
-            spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-        ).collect()
-        == []
-    )
-
-
-def test_compact_crash_before_publish_replays_from_stage(
-    spark, tmp_path, monkeypatch
-):
-    """Crash between writing the claim manifest and publishing the
-    target: the stage is intact, so replay publishes it without
-    re-reading the sources, then finishes the claim."""
-    import kubernetes_logs_datalake_spark.sources.compact as compact_mod
-
-    root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1, files_per_part=4)
-    d = os.path.join(root, "part=0")
-
-    def crash_publish(*args, **kwargs):
-        raise RuntimeError("injected crash before publish")
-
-    monkeypatch.setattr(compact_mod, "_publish", crash_publish)
-    with pytest.raises(Exception, match="injected crash"):
-        compact_files(spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30)
+    monkeypatch.setattr(cmod, "_listing", listing_then_append)
+    compact_lake(spark, root)
     monkeypatch.undo()
-
-    # crashed state: no target, manifest + hidden stage dir + all sources
-    # (_data_files walks into the stage dir; exclude it — readers don't)
-    assert len([f for f in _data_files(d) if "_compact-stage-" not in f]) == 4
-    assert any(f.startswith("_compact-stage-") for f in os.listdir(d))
-
-    rep = compact_files(
-        spark, f"{root}/part=*/*.parquet", target_bytes=1 << 30
-    ).collect()
-    assert [r.action for r in rep] == ["replayed_publish"]
-    assert len(_data_files(d)) == 1
-    assert spark.read.parquet(d).count() == total
-    assert not any(
-        ".sources" in f or f.startswith("_compact-stage-")
-        for f in os.listdir(d)
-    )
+    for fmt in FORMATS:
+        msgs = _messages(spark, lake, fmt)
+        assert sum(msgs.values()) == 20 and set(msgs.values()) == {1}, fmt
+        assert len(_names(root, fmt)) == 2  # the compacted file + the late one
 
 
-def test_compact_copy_mode_end_to_end(spark, tmp_path):
-    """Object-store publish semantics (no rename): copy + length-verify
-    + stage delete must converge to the same lake state as rename mode,
-    and re-run must be a no-op."""
+# ------------------------------------------------------------ crash replay
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _manifests(root):
+    return sorted(p for p in _files(root) if os.path.basename(p).startswith(".compact-"))
+
+
+def _crash_then_converge(spark, tmp_path, monkeypatch, inject, crashed_state=None):
+    """Compact a one-partition dual-format lake (two bins) with ``inject``
+    applied; a batch lands; then re-run without it: exact per-format
+    counts, no duplicate, no manifest, and a further run is a no-op."""
     root = str(tmp_path / "lake")
-    _write_lake(spark, root)
-    before_hash = _lake_hash(spark, root)
+    lake = _lake(spark, root)
+    before = {fmt: _messages(spark, lake, fmt) for fmt in FORMATS}
+    inject(root)
+    with pytest.raises(Crash):
+        compact_lake(spark, root)
+    monkeypatch.undo()
+    for fmt in FORMATS:  # never a lost row, whatever the crash point
+        assert set(_messages(spark, lake, fmt)) == set(before[fmt]), fmt
+    if crashed_state is not None:
+        crashed_state(root, lake)
+    # a late batch changes every bin the re-run plans, so a target the
+    # crash left behind cannot be overwritten by its own re-run
+    _batch(spark, lake, 9)
 
-    rep = compact_files(
-        spark,
-        f"{root}/part=*/*.parquet",
-        target_bytes=1 << 30,
-        publish_mode="copy",
-    ).collect()
-    assert all(r.action == "rewritten" for r in rep)
-    assert len(_data_files(root)) == 2
-    assert _lake_hash(spark, root) == before_hash
-    assert (
-        compact_files(
-            spark,
-            f"{root}/part=*/*.parquet",
-            target_bytes=1 << 30,
-            publish_mode="copy",
-        ).collect()
-        == []
+    compact_lake(spark, root)
+
+    for fmt in FORMATS:
+        msgs = _messages(spark, lake, fmt)
+        assert sum(msgs.values()) == 20 and set(msgs.values()) == {1}, fmt
+        assert set(msgs) == set(before[fmt]) | {f"qa-b9-{i}" for i in range(5)}, fmt
+    assert not _manifests(root)
+    files = _files(root)
+    assert compact_lake(spark, root) == 0
+    assert _files(root) == files
+
+
+def test_compact_crash_before_publish_rolls_back(spark, tmp_path, monkeypatch):
+    """Crash after the claim, before any target is published: the
+    replay retires the manifests and compacts the untouched sources."""
+
+    def crash_rewrite(*args):
+        raise Crash("before publish")
+
+    def crashed_state(root, lake):
+        assert len(_manifests(root)) == 2
+        assert {fmt: len(_names(root, fmt)) for fmt in FORMATS} == {"parquet": 3, "arrow": 3}
+
+    _crash_then_converge(
+        spark, tmp_path, monkeypatch,
+        lambda root: monkeypatch.setattr(cmod, "_rewrite_bins", crash_rewrite),
+        crashed_state,
     )
 
 
-def test_compact_copy_mode_torn_target_republishes(spark, tmp_path):
-    """A torn copy-mode publish (crash mid-PUT on a store without an
-    atomic one): the target exists but its length disagrees with the
-    manifest. Replay must detect the tear via the length check,
-    republish, and converge — never trust a target by existence."""
-    from kubernetes_logs_datalake_spark.sources.compact import (
-        _Fs,
-        _manifest_name,
-        _sha256_of,
-        _stage_part,
-        _write_manifest,
+def test_compact_crash_after_some_targets_published(spark, tmp_path, monkeypatch):
+    """Crash while the rewrite job runs: the Parquet bin's target is
+    published, the Arrow bin's is not, and no published record exists.
+    The replay deletes the published target instead of keeping it next
+    to its sources."""
+    real = cmod._rewrite_bins
+
+    def crash_midway(spark_, lake, claims):
+        real(spark_, lake, claims)
+        for name in _names(lake.base, "arrow"):
+            if "/part-compact-" in name:
+                os.remove(os.path.join(lake.base, name))
+        raise Crash("midway through the rewrite job")
+
+    def crashed_state(root, lake):
+        assert len(_manifests(root)) == 2
+        assert len(_names(root, "parquet")) == 4  # 3 sources + 1 target
+        assert lake.read(spark, "parquet").count() == 30  # the duplicate window
+
+    _crash_then_converge(
+        spark, tmp_path, monkeypatch,
+        lambda root: monkeypatch.setattr(cmod, "_rewrite_bins", crash_midway),
+        crashed_state,
     )
 
+
+def _crash_on_delete(monkeypatch, when):
+    real = cmod._delete
+    calls = []
+
+    def delete(lake, rel, name):
+        calls.append(name)
+        if when(name, len(calls)):
+            raise Crash(f"deleting {name}")
+        real(lake, rel, name)
+
+    monkeypatch.setattr(cmod, "_delete", delete)
+
+
+def test_compact_crash_between_publish_and_delete_replays(spark, tmp_path, monkeypatch):
+    """Crash after the published record, before the first source delete:
+    readers see every row twice, and the replay deletes the sources."""
+
+    def crashed_state(root, lake):
+        assert {fmt: lake.read(spark, fmt).count() for fmt in FORMATS} == {"parquet": 30, "arrow": 30}
+
+    _crash_then_converge(
+        spark, tmp_path, monkeypatch,
+        lambda root: _crash_on_delete(monkeypatch, lambda name, n: n == 1),
+        crashed_state,
+    )
+
+
+def test_compact_crash_mid_source_delete_does_not_duplicate(spark, tmp_path, monkeypatch):
+    """Crash after two of a bin's three sources are deleted: the replay
+    takes the bin's membership from the manifest and never re-bins the
+    surviving source next to the published target."""
+
+    def crashed_state(root, lake):
+        (first,) = [fmt for fmt in FORMATS if len(_names(root, fmt)) == 2]  # target + 1 source
+        assert lake.read(spark, first).count() == 15 + 5
+
+    _crash_then_converge(
+        spark, tmp_path, monkeypatch,
+        lambda root: _crash_on_delete(monkeypatch, lambda name, n: n == 3),
+        crashed_state,
+    )
+
+
+def test_compact_crash_before_manifest_retired(spark, tmp_path, monkeypatch):
+    """Crash after a bin's sources are deleted, before its manifest is:
+    the replay retires that manifest and rolls back the other bin, whose
+    target was published without a record."""
+
+    def crashed_state(root, lake):
+        assert len(_manifests(root)) == 2
+        assert sorted(len(_names(root, fmt)) for fmt in FORMATS) == [1, 4]
+
+    _crash_then_converge(
+        spark, tmp_path, monkeypatch,
+        lambda root: _crash_on_delete(monkeypatch, lambda name, n: name.startswith(".compact-")),
+        crashed_state,
+    )
+
+
+def test_replay_refuses_a_torn_published_target(spark, tmp_path, monkeypatch):
+    """A published record whose target no longer has its recorded
+    length stops the replay before any source is deleted."""
     root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1, files_per_part=4)
-    d = os.path.join(root, "part=0")
-    paths = [f"file:{p}" for p in _data_files(d)]
-
-    # hand-build the crashed state: stage + manifest + torn target
-    fsx = _Fs(spark, f"file:{d}")
-    stage_dir, part = _stage_part(spark, fsx, f"file:{d}", paths)
-    expected = fsx.length(part)
-    _write_manifest(fsx, f"file:{d}", paths, expected, _sha256_of(spark, part))
-    torn = os.path.join(d, _target_name(paths))
-    with open(torn, "wb") as fh:
-        fh.write(b"\x00" * (expected // 2))  # half the bytes — torn
-
-    rep = compact_files(
-        spark,
-        f"{root}/part=*/*.parquet",
-        target_bytes=1 << 30,
-        publish_mode="copy",
-    ).collect()
-    assert [r.action for r in rep] == ["replayed_publish"]
-    assert len(_data_files(d)) == 1
-    assert spark.read.parquet(d).count() == total
-    assert os.path.getsize(torn) == expected
-    assert not any(
-        ".sources" in f or f.startswith("_compact-stage-")
-        for f in os.listdir(d)
-    )
-
-
-def test_compact_copy_mode_same_length_corruption_republishes(
-    spark, tmp_path
-):
-    """A torn PUT with a coincidentally-correct LENGTH (the r9 verdict's
-    'beyond-parity polish' hole): the length check passes but the bytes
-    are wrong. Replay must detect it via the manifest's sha256 and
-    republish — content, not size, is the claim."""
-    from kubernetes_logs_datalake_spark.sources.compact import (
-        _Fs,
-        _sha256_of,
-        _stage_part,
-        _write_manifest,
-    )
-
-    root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1, files_per_part=4)
-    d = os.path.join(root, "part=0")
-    paths = [f"file:{p}" for p in _data_files(d)]
-
-    fsx = _Fs(spark, f"file:{d}")
-    stage_dir, part = _stage_part(spark, fsx, f"file:{d}", paths)
-    expected = fsx.length(part)
-    good_sha = _sha256_of(spark, part)
-    _write_manifest(fsx, f"file:{d}", paths, expected, good_sha)
-    torn = os.path.join(d, _target_name(paths))
-    # same length, wrong bytes — rewrite the staged part's bytes with
-    # a deterministic scramble (valid length, invalid content)
-    with open(part.removeprefix("file:"), "rb") as fh:
-        data = fh.read()
-    with open(torn, "wb") as fh:
-        fh.write(bytes(b ^ 0x5A for b in data[: len(data) // 2]) + data[len(data) // 2:])
-
-    rep = compact_files(
-        spark,
-        f"{root}/part=*/*.parquet",
-        target_bytes=1 << 30,
-        publish_mode="copy",
-    ).collect()
-    assert [r.action for r in rep] == ["replayed_publish"]
-    assert spark.read.parquet(d).count() == total
-    assert _sha256_of(spark, f"file:{torn}") == good_sha
-    assert not any(
-        ".sources" in f or f.startswith("_compact-stage-")
-        for f in os.listdir(d)
-    )
-
-
-def test_compact_replay_cleans_orphan_stage_when_target_ok(spark, tmp_path):
-    """Crash between publish and stage-delete, then replay with an
-    intact target: the r10 ADVICE leak — the stage dir (a full hidden
-    duplicate of the bin in copy mode) must be deleted on the
-    target_ok path too, not orphaned forever once the manifest
-    retires."""
-    from kubernetes_logs_datalake_spark.sources.compact import (
-        _Fs,
-        _publish,
-        _sha256_of,
-        _stage_part,
-        _write_manifest,
-    )
-
-    root = str(tmp_path / "lake")
-    total = _write_lake(spark, root, n_parts=1, files_per_part=4)
-    d = os.path.join(root, "part=0")
-    paths = [f"file:{p}" for p in _data_files(d)]
-
-    # hand-build: published target + manifest + LEFTOVER stage dir
-    fsx = _Fs(spark, f"file:{d}")
-    stage_dir, part = _stage_part(spark, fsx, f"file:{d}", paths)
-    expected = fsx.length(part)
-    sha = _sha256_of(spark, part)
-    _write_manifest(fsx, f"file:{d}", paths, expected, sha)
-    target = os.path.join(d, _target_name(paths))
-    _publish(spark, fsx, part, f"file:{target}", expected, sha, "copy")
-    assert any(f.startswith("_compact-stage-") for f in os.listdir(d))
-
-    rep = compact_files(
-        spark,
-        f"{root}/part=*/*.parquet",
-        target_bytes=1 << 30,
-        publish_mode="copy",
-    ).collect()
-    assert [r.action for r in rep] == ["replayed_delete"]
-    assert spark.read.parquet(d).count() == total
-    assert not any(
-        ".sources" in f or f.startswith("_compact-stage-")
-        for f in os.listdir(d)
-    )
-
-
-def test_compact_pattern_without_separator_rejected(spark):
-    """A separator-less pattern can't locate claim manifests; silently
-    skipping phase 0 would bypass the replay-duplication protection
-    (r10 ADVICE) — it must raise instead."""
-    with pytest.raises(ValueError, match="directory component"):
-        compact_files(spark, "orders.parquet", target_bytes=1 << 20)
-
-
-def test_sha256_streaming_fallback_matches_binaryfile(spark, tmp_path):
-    """Files at/past the binaryFile content cap stream through the JVM
-    MessageDigest fallback (r10 ADVICE: a >=2 GiB bin used to crash
-    the verify leg and wedge every replay at the same point).
-    Exercised by lowering the threshold so a small file takes the
-    streaming path; the digest must be bit-identical to hashlib and to
-    the binaryFile leg — including a leading-zero digest's padding."""
-    import hashlib
-
-    from kubernetes_logs_datalake_spark.sources.compact import _sha256_of
-
-    p = tmp_path / "blob.bin"
-    data = bytes(range(256)) * 4097  # ~1 MiB, not buffer-aligned
-    p.write_bytes(data)
-    expected = hashlib.sha256(data).hexdigest()
-    assert _sha256_of(spark, f"file:{p}") == expected
-    assert _sha256_of(spark, f"file:{p}", binaryfile_max=1024) == expected
+    _lake(spark, root)
+    _crash_on_delete(monkeypatch, lambda name, n: n == 1)
+    with pytest.raises(Crash):
+        compact_lake(spark, root)
+    monkeypatch.undo()
+    # the Parquet bin is finished first: its record is written
+    (target,) = [p for p in _names(root, "parquet") if "/part-compact-" in p]
+    with open(os.path.join(root, target), "ab") as fh:
+        fh.write(b"\0")
+    sources = [p for p in _names(root, "parquet") if "/part-compact-" not in p]
+    assert len(sources) == 3
+    with pytest.raises(RuntimeError, match="missing or torn"):
+        compact_lake(spark, root)
+    assert set(sources) <= set(_names(root, "parquet"))

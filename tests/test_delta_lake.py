@@ -41,7 +41,7 @@ def test_lake_roundtrip_and_compaction_contract(spark, tmp_path):
     With delta-spark installed this runs DeltaLogLake + OPTIMIZE; in
     this sandbox (no delta-spark, no network for jars) it runs the
     module's documented substitution — parquet LogLake +
-    streaming.ingest.compact_lake — so the delta surface's behavioral
+    sources.compact.compact_lake — so the delta surface's behavioral
     contract is exercised on every run rather than permanently skipped."""
     if delta_available():  # pragma: no cover - env-dependent
         lake = DeltaLogLake(str(tmp_path / "dlake"))
@@ -51,8 +51,8 @@ def test_lake_roundtrip_and_compaction_contract(spark, tmp_path):
         lake.compact(spark)
         assert lake.read(spark).count() == 30
     else:
+        from kubernetes_logs_datalake_spark.sources.compact import compact_lake
         from kubernetes_logs_datalake_spark.sources.logs import LogLake
-        from kubernetes_logs_datalake_spark.streaming.ingest import compact_lake
 
         root = str(tmp_path / "plake")
         lake = LogLake(root)
@@ -73,8 +73,8 @@ def test_substitution_concurrent_append_survives_compaction(
     listing). Injected at the seam: the listing hook appends a batch
     AFTER the snapshot is taken but BEFORE any rewrite/delete — the
     worst-case interleaving — and the appended rows must survive."""
+    from kubernetes_logs_datalake_spark.sources import compact as cmp
     from kubernetes_logs_datalake_spark.sources.logs import LogLake
-    from kubernetes_logs_datalake_spark.streaming import ingest as ing
 
     root = str(tmp_path / "plake")
     lake = LogLake(root)
@@ -82,18 +82,18 @@ def test_substitution_concurrent_append_survives_compaction(
     lake.write_batch(_records(spark, 10, "b"))
     assert lake.read(spark).count() == 30
 
-    real_listing = ing._parquet_files_by_dir
+    real_listing = cmp._listing
     fired = {"n": 0}
 
-    def listing_then_append(fs, r):
-        out = real_listing(fs, r)
-        if fired["n"] == 0:  # only the snapshot call, not the temp-tree one
+    def listing_then_append(*args):
+        out = real_listing(*args)
+        if fired["n"] == 0:  # only the snapshot call, not the published-target one
             fired["n"] += 1
             lake.write_batch(_records(spark, 5, "mid"))
         return out
 
-    monkeypatch.setattr(ing, "_parquet_files_by_dir", listing_then_append)
-    ing.compact_lake(spark, root, min_files=2)
+    monkeypatch.setattr(cmp, "_listing", listing_then_append)
+    cmp.compact_lake(spark, root, min_files=2)
     assert fired["n"] == 1
     df = lake.read(spark)
     assert df.count() == 35  # 30 compacted + 5 appended mid-compaction
@@ -107,8 +107,8 @@ def test_substitution_compaction_replay_is_idempotent(spark, tmp_path):
     rewrite, so the file set is stable."""
     import glob as globmod
 
+    from kubernetes_logs_datalake_spark.sources.compact import compact_lake
     from kubernetes_logs_datalake_spark.sources.logs import LogLake
-    from kubernetes_logs_datalake_spark.streaming.ingest import compact_lake
 
     root = str(tmp_path / "plake2")
     lake = LogLake(root)
@@ -162,17 +162,17 @@ def test_substitution_reader_visibility_during_compaction(
     substitution's compaction sees EVERY row at least once. Delta gets
     this from snapshot isolation on the log; the parquet path gets it
     from publish-then-delete ordering — the only transient anomaly is
-    duplication inside the rename window, never loss and never a torn
+    duplication inside the publish window, never loss and never a torn
     file. Probed deterministically: (a) at both listing seams (the
-    snapshot and the temp-tree listing — i.e. before the rewrite and
-    after the compacted files exist but before any rename/delete), and
-    (b) in the reconstructed rename-window state itself (compacted
+    snapshot and the listing of the published targets — i.e. before the
+    rewrite and after the compacted files exist but before any delete),
+    and (b) in the reconstructed publish-window state itself (compacted
     files live NEXT TO all their sources)."""
     import glob as globmod
     import shutil
 
+    from kubernetes_logs_datalake_spark.sources import compact as cmp
     from kubernetes_logs_datalake_spark.sources.logs import LogLake
-    from kubernetes_logs_datalake_spark.streaming import ingest as ing
 
     root = str(tmp_path / "plake3")
     lake = LogLake(root)
@@ -187,23 +187,23 @@ def test_substitution_reader_visibility_during_compaction(
         shutil.copy2(f, backup / f"{i}__{f.replace('/', '%')}")
 
     seen: list[set] = []
-    real_listing = ing._parquet_files_by_dir
+    real_listing = cmp._listing
 
-    def listing_probe(fs, r):
-        out = real_listing(fs, r)
+    def listing_probe(*args):
+        out = real_listing(*args)
         seen.append({row.message for row in lake.read(spark).collect()})
         return out
 
-    monkeypatch.setattr(ing, "_parquet_files_by_dir", listing_probe)
-    ing.compact_lake(spark, root, min_files=2)
+    monkeypatch.setattr(cmp, "_listing", listing_probe)
+    cmp.compact_lake(spark, root, min_files=2)
     monkeypatch.undo()
 
     # (a) both in-flight listing probes saw the complete row set
-    assert len(seen) == 2  # snapshot listing + temp-tree listing
+    assert len(seen) == 2  # snapshot listing + published-target listing
     assert all(msgs == full for msgs in seen)
     assert {r.message for r in lake.read(spark).collect()} == full
 
-    # (b) rebuild the worst-case rename-window state byte-for-byte:
+    # (b) rebuild the worst-case publish-window state byte-for-byte:
     # compacted files present AND every source restored beside them
     for i, f in enumerate(small_files):
         shutil.copy2(backup / f"{i}__{f.replace('/', '%')}", f)
@@ -211,9 +211,9 @@ def test_substitution_reader_visibility_during_compaction(
     assert {r.message for r in df.collect()} == full  # nothing missing
     assert df.count() == 60  # every row exactly twice — dup, never loss
 
-    # and the substitution's own replay converges back out of it:
-    # compaction treats the restored sources + compacted file as input
-    # (at-least-once keeps the dups, exactly like ingest's contract)
-    ing.compact_lake(spark, root, min_files=2)
+    # and the substitution's own replay converges back out of it: the
+    # restored sources form the same bin again, whose targets (named
+    # from their sources) are rewritten in place
+    cmp.compact_lake(spark, root, min_files=2)
     after = lake.read(spark)
     assert {r.message for r in after.collect()} == full

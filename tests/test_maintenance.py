@@ -127,3 +127,52 @@ def test_merge_upsert_requires_partition_columns(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "x long")
     with pytest.raises(ValueError, match="partition columns"):
         merge_upsert(spark, str(tmp_path / "nolake"), df, ["x"])
+
+
+def _upsert_lake(spark, root, cluster, formats):
+    """Six records in one partition; updates replace record 3 and add one."""
+    lake = LogLake(root)
+    lake.write_formats(
+        _records(spark, 15, "qa", 6, "orig").withColumn("cluster", F.lit(cluster)), formats, "0" * 32
+    )
+    updates = parse_cri_lines(
+        spark.createDataFrame(
+            [
+                ("/var/log/pods/qa_pod-1_uid1/app/0.log", "2024-01-15T10:30:03.000000003Z stdout F patched-3"),
+                ("/var/log/pods/qa_pod-1_uid1/app/0.log", "2024-01-15T10:30:59.000000000Z stdout F appended"),
+            ],
+            ["path", "value"],
+        ),
+        path_col="path",
+        cluster=cluster,
+    )
+    return lake, updates
+
+
+EXPECTED = sorted({"orig-0", "orig-1", "orig-2", "patched-3", "orig-4", "orig-5", "appended"})
+
+
+def test_merge_upsert_escaped_cluster_replaces_originals(spark, tmp_path):
+    """Cluster ``a:b`` lives in ``cluster=a%3Ab``: its originals are found
+    and replaced, so 6 records plus 1 new one remain."""
+    root = str(tmp_path / "lake_escaped")
+    lake, updates = _upsert_lake(spark, root, "a:b", ("parquet",))
+    assert merge_upsert(spark, root, updates, key_cols=["namespace", "pod", "time_ns"]) == 1
+    got = lake.read(spark, cluster="a:b")
+    assert sorted(r.message for r in got.collect()) == EXPECTED
+
+
+def test_merge_upsert_updates_every_format(spark, tmp_path):
+    """On a dual-format lake both formats carry the upsert: -f parquet
+    and -f arrow return the same records, -f both each of them twice."""
+    from collections import Counter
+
+    from kubernetes_logs_datalake_spark.plans import LogQuery
+
+    root = str(tmp_path / "lake_dual")
+    lake, updates = _upsert_lake(spark, root, "dev", ("parquet", "arrow"))
+    merge_upsert(spark, root, updates, key_cols=["namespace", "pod", "time_ns"])
+    for fmt in ("parquet", "arrow"):
+        assert sorted(r.message for r in lake.read(spark, fmt).collect()) == EXPECTED, fmt
+    both = Counter(r.message for r in LogQuery(lake, fmt="both").df(spark).collect())
+    assert sorted(both) == EXPECTED and set(both.values()) == {2}

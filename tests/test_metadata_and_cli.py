@@ -124,34 +124,3 @@ def test_schema_diff(spark, tmp_path):
         "new": ("added", None, "int32"),
         "v": ("type_changed", "double", "int64"),
     }
-
-
-def test_compaction_plan(spark, tmp_path):
-    import pytest as _pytest
-
-    from kubernetes_logs_datalake_spark.sources.metadata import (
-        compaction_plan,
-    )
-
-    d1 = tmp_path / "p=1"
-    d2 = tmp_path / "p=2"
-    d1.mkdir(); d2.mkdir()
-    # p=1: four 40-byte files -> exclusive cumsum 0,40,80,120 with
-    # target 100 -> bins 0,0,0,1
-    for i in range(4):
-        (d1 / f"f{i}.bin").write_bytes(b"x" * 40)
-    # p=2: one oversized file closes its own bin; next starts bin 2
-    (d2 / "big.bin").write_bytes(b"y" * 250)
-    (d2 / "z.bin").write_bytes(b"z" * 10)
-    out = [
-        (r.dir.rsplit("/", 1)[-1], r.bin, r.n_files, r.total_bytes, r.n_compacted)
-        for r in compaction_plan(spark, str(tmp_path) + "/*/*.bin", 100).collect()
-    ]
-    assert out == [
-        ("p=1", 0, 3, 120, 3),
-        ("p=1", 1, 1, 40, 0),
-        ("p=2", 0, 1, 250, 0),
-        ("p=2", 2, 1, 10, 0),
-    ]
-    with _pytest.raises(ValueError):
-        compaction_plan(spark, str(tmp_path) + "/*", 0)

@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from kubernetes_logs_datalake_spark.session import pyarrow_s3_options, s3a_conf
 from kubernetes_logs_datalake_spark.sources import parse_cri_lines
+from kubernetes_logs_datalake_spark.sources.compact import compact_lake
 from kubernetes_logs_datalake_spark.sources.logs import LogLake
-from kubernetes_logs_datalake_spark.streaming.ingest import compact_lake
 
 
 def _cri_batch(spark, n=30, start=0):

@@ -367,12 +367,13 @@ def test_staleness_rule_is_self_enforcing():
     the upcoming run without being in the current 50-query window —
     running it inside the suite makes the rule self-enforcing instead
     of a report someone has to read."""
+    import os
     import subprocess
     import sys
 
     p = subprocess.run(
         [sys.executable, "tools/ledger.py"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=120,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), capture_output=True, text=True, timeout=120,
     )
     assert p.returncode == 0, f"ledger guard failed:\n{p.stdout[-2000:]}"
     assert "staleness OK" in p.stdout

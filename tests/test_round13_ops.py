@@ -13,7 +13,7 @@ import sys
 
 import pytest
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run_ledger(cwd: str) -> subprocess.CompletedProcess:
